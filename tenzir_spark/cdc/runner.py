@@ -43,6 +43,7 @@ from tenzir_spark.lake.table import (
     PART_COL,
     LakeTable,
 )
+from tenzir_spark.session import local_frame
 
 CONTROL_COLS = ("lsn", "epoch", "part_id", "op")
 
@@ -453,19 +454,22 @@ class IngestRunner:
         # every batch would compile a fresh codegen unit (measured
         # ~0.3-0.5 s/batch) and at 10^4+ source partitions the generated
         # source itself blows up — the join keeps the plan STABLE across
-        # batches (codegen cache hit) and the data out of the code.
+        # batches (codegen cache hit) and the data out of the code. The
+        # table is a LocalRelation (local_frame): a createDataFrame(list)
+        # Python RDD runs a job through Python workers to build the
+        # broadcast on every batch. Codegen reuse re-measured with the
+        # LocalRelation (cdcbench narrow_rows, 4 cores, traced): 28-38 ms
+        # of compile time per batch, against 57-109 ms with the Python RDD.
         if self.collapse_mode == "semijoin":
             # the semijoin collapse needs the file-source _metadata
             # pseudo-column, which does not survive a join — materialize
             # it as a regular column first
             raw = raw.select("*", "_metadata")
         wm_rows = [(int(k), int(v)) for k, v in wm.items()]
-        wm_df = self.spark.createDataFrame(
-            wm_rows, T.StructType([
-                T.StructField("part_id", T.IntegerType(), False),
-                T.StructField("_wm", T.LongType(), False),
-            ])
-        )
+        wm_df = local_frame(self.spark, wm_rows, T.StructType([
+            T.StructField("part_id", T.IntegerType(), False),
+            T.StructField("_wm", T.LongType(), False),
+        ]))
         raw = raw.join(F.broadcast(wm_df), on="part_id", how="left")
         is_fresh = F.col("lsn") > F.coalesce(F.col("_wm"), F.lit(-1))
 

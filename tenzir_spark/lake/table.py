@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tenzir_spark.lake.fs import LocalFS
+from tenzir_spark.session import local_frame
 
 BUCKET_COL = "_bucket"
 COMMIT_COL = "_commit"
@@ -48,6 +49,42 @@ DELETED_COL = "_deleted"
 PART_COL = "_part"  # source-partition lineage carried in delta files
 LSN_COL = "_lsn"    # winner LSN carried in delta files (one-job stats mode:
 NEV_COL = "_n_ev"   # watermarks + dedup counts come from delta footers)
+
+
+# typed InternalRow setter per key type, so the JVM holds the value boxed
+# as the writer's column holds it (a py4j int arrives as Integer or Long
+# by magnitude, not by column type)
+_ROW_SETTERS = {
+    T.BooleanType: "setBoolean", T.ByteType: "setByte",
+    T.ShortType: "setShort", T.IntegerType: "setInt", T.DateType: "setInt",
+    T.LongType: "setLong", T.TimestampType: "setLong",
+    T.TimestampNTZType: "setLong", T.FloatType: "setFloat",
+    T.DoubleType: "setDouble",
+}
+
+
+def _jvm_xxhash64(spark: SparkSession, value, field: T.StructField) -> int | None:
+    """``xxhash64(value)`` with the column type of ``field``, computed by
+    Spark's ``XxHash64Function`` in the driver JVM (no job). The value
+    sits in a one-field row: the hash of a struct folds its fields into
+    the seed one by one, so it equals ``xxhash64`` of that one column.
+    None if the type has no setter here (decimal, nested types)."""
+    jvm = spark._jvm
+    expr = jvm.org.apache.spark.sql.catalyst.expressions
+    dt = field.dataType
+    row = expr.GenericInternalRow(1)
+    if value is not None:
+        v = dt.toInternal(value)  # date -> days, timestamp -> micros
+        if isinstance(dt, T.StringType):
+            row.update(0, jvm.org.apache.spark.unsafe.types.UTF8String.fromString(v))
+        elif isinstance(dt, T.BinaryType):
+            row.update(0, bytearray(v))
+        elif type(dt) in _ROW_SETTERS:
+            getattr(row, _ROW_SETTERS[type(dt)])(0, v)
+        else:
+            return None
+    jtype = spark._jsparkSession.parseDataType(T.StructType([field]).json())
+    return expr.XxHash64Function.hash(row, jtype, 42)
 
 
 class LakeTable:
@@ -331,7 +368,7 @@ class LakeTable:
         no persisted warehouse in this repo predates it.)"""
         schema = self._read_schema(payload_schema or self.schema(), with_deleted)
         if not file_entries:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         paths = [self.fs.spark_path(os.path.join(self.root, e["path"]))
                  for e in file_entries]
         out = (
@@ -362,7 +399,15 @@ class LakeTable:
         cold buckets stream through with zero shuffle (the manifest's
         per-delta bucket list is our partition-pruning synopsis, reference
         analog: catalog pruning, libtenzir/src/catalog.cpp:119-171)."""
-        snap = self.snapshot(version)
+        return self._read(spark, self.snapshot(version), buckets)
+
+    def _read(self, spark: SparkSession, snap: dict,
+              buckets: list[int] | None = None,
+              key_eq: F.Column | None = None) -> DataFrame:
+        """``read`` of the manifest ``snap``. ``key_eq`` (a predicate on
+        the key column only) filters every scan BELOW the LWW resolve:
+        the resolve groups by the key, so dropping other keys first
+        changes no winner, and only the matching key's rows shuffle."""
         schema = T.StructType.fromJson(snap["schema"])
         entries = snap["files"]
         if buckets is not None:
@@ -372,35 +417,48 @@ class LakeTable:
                 if (e.get("kind", "base") == "base" and e["bucket"] in bset)
                 or (e.get("kind") == "delta" and bset & set(e["buckets"]))
             ]
+
+        def keyed(df: DataFrame) -> DataFrame:
+            return df if key_eq is None else df.filter(key_eq)
+
         base, deltas = self._split_entries(entries)
         if not deltas:
-            return self.read_files(spark, base, schema)
+            return keyed(self.read_files(spark, base, schema))
         key = snap.get("key", "doc_id")
         hot = set()
         for e in deltas:
             hot.update(e["buckets"])
         cold_base = [e for e in base if e["bucket"] not in hot]
         hot_base = [e for e in base if e["bucket"] in hot]
-        resolved = self._resolve(spark, hot_base, deltas, schema, key)
+        resolved = self._resolve(spark, hot_base, deltas, schema, key, key_eq)
         if buckets is not None:
             # delta files span buckets; keep only the requested ones
             resolved = resolved.filter(F.col(BUCKET_COL).isin(list(bset)))
-        cold = self.read_files(spark, cold_base, schema)
+        cold = keyed(self.read_files(spark, cold_base, schema))
         return cold.unionByName(resolved)
 
     def bucket_of(self, spark: SparkSession, value, version: int | None = None) -> int:
-        """The bucket a key value hashes to — computed with the SAME JVM
-        expression the writer uses (a 1-row job; reimplementing xxhash64
-        driver-side would be a second source of truth). ``version`` uses
-        THAT snapshot's bucket count: after a rebucket, time-travel
-        lookups must hash with the spec the old files were written
-        under, not the current one."""
-        n = int(self.snapshot(version)["n_buckets"])
-        row = spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(value)), F.lit(n))
-            .cast("int").alias("b")
-        ).first()
-        return int(row["b"])
+        """The bucket a key value hashes to — Spark's own ``xxhash64``
+        (``XxHash64Function``, seed 42: the function behind the writer's
+        ``bucket_expr``) evaluated in the driver JVM over py4j, with no
+        Spark job; reimplementing xxhash64 in Python would be a second
+        source of truth. The value is hashed as the key column's type in
+        the snapshot schema, as the writer hashed it — the Python type
+        would hash ``5`` as an int even when the key is a long.
+        ``version`` uses THAT snapshot's bucket count and schema: after a
+        rebucket, time-travel lookups must hash with the spec the old
+        files were written under, not the current one."""
+        snap = self.snapshot(version)
+        field = T.StructType.fromJson(snap["schema"])[snap.get("key", "doc_id")]
+        n = int(snap["n_buckets"])
+        h = _jvm_xxhash64(spark, value, field)
+        if h is None:
+            # no typed row setter for this key type: the writer's
+            # expression over a literal cast to the key type (1-row job)
+            h = spark.range(1).select(
+                F.xxhash64(F.lit(value).cast(field.dataType)).alias("h")
+            ).first()["h"]
+        return h % n  # Python's % of a positive n is Spark's pmod
 
     def lookup(self, spark: SparkSession, value,
                version: int | None = None) -> DataFrame:
@@ -408,17 +466,20 @@ class LakeTable:
         to its bucket and read ONLY that bucket's base files + the deltas
         touching it — at 10^9 keys this scans 1/n_buckets of the table
         instead of all of it (the reference's catalog-pruned point query,
-        catalog.cpp:119-171; Iceberg bucket-transform partition pruning)."""
+        catalog.cpp:119-171; Iceberg bucket-transform partition pruning).
+        The key equality sits on each scan, below the LWW resolve, so
+        parquet gets it as a pushed filter and only that key's rows
+        reach the resolve's shuffle."""
         # pin the version ONCE: with version=None, resolving HEAD inside
-        # bucket_of and again inside read races a concurrent rebucket —
+        # bucket_of and again for the read races a concurrent rebucket —
         # the hash would use one spec and the manifest pruning another,
         # silently missing a present key
         v = self.current_version() if version is None else version
-        key = self.snapshot(v).get("key", "doc_id")
+        snap = self.snapshot(v)
+        key = snap.get("key", "doc_id")
         b = self.bucket_of(spark, value, v)
-        return self.read(spark, buckets=[b], version=v).filter(
-            F.col(key) == F.lit(value)
-        )
+        return self._read(spark, snap, buckets=[b],
+                          key_eq=F.col(key) == F.lit(value))
 
     def _resolve(
         self,
@@ -427,12 +488,16 @@ class LakeTable:
         deltas: list[dict],
         schema: T.StructType,
         key: str,
+        key_eq: F.Column | None = None,
     ) -> DataFrame:
         """Merge-on-read LWW: per key keep the row from the highest commit,
         then drop tombstones. Algebraic ``max_by`` → map-side partial
-        aggregation; only hot-bucket rows shuffle."""
+        aggregation; only hot-bucket rows shuffle. ``key_eq`` (see
+        ``_read``) filters both scans before the resolve."""
         base_df = self.read_files(spark, hot_base, schema, with_deleted=True)
         delta_df = self.read_files(spark, deltas, schema, with_deleted=True)
+        if key_eq is not None:
+            base_df, delta_df = base_df.filter(key_eq), delta_df.filter(key_eq)
         both = base_df.unionByName(delta_df)
         cols = both.columns
         winner = (
@@ -917,7 +982,7 @@ class LakeTable:
             empty = T.StructType(
                 list(schema.fields) + [T.StructField("op", T.StringType())]
             )
-            return spark.createDataFrame([], empty)
+            return local_frame(spark, [], empty)
         df = self.read_files(spark, list(new_deltas.values()), schema,
                              with_deleted=True)
         cols = df.columns

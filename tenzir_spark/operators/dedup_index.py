@@ -107,6 +107,7 @@ from tenzir_spark.operators.dedup import (
     minhash_signature_sliced,
 )
 from tenzir_spark.plans.expr import dtype_of, field_col
+from tenzir_spark.session import local_frame
 
 
 def _sig_agreement(a: Column, b: Column) -> Column:
@@ -228,7 +229,7 @@ def _batch_ids(p: str, fs=None) -> set[int]:
 
 
 def _empty_bandcnt(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], T.StructType([
+    return local_frame(spark, [], T.StructType([
         T.StructField("band", T.LongType()),
         T.StructField("_ci", T.LongType()),
     ]))
@@ -528,11 +529,11 @@ class NearDupIndex:
             return sig, band, _read_bandcnt(
                 spark, self._bandcnt_path, batch_id, band,
                 band_path=self._band_path, fs=self.fs)
-        empty_sig = spark.createDataFrame([], T.StructType([
+        empty_sig = local_frame(spark, [], T.StructType([
             T.StructField("_iid", id_type),
             T.StructField("_isig", T.ArrayType(T.LongType())),
         ]))
-        empty_band = spark.createDataFrame([], T.StructType([
+        empty_band = local_frame(spark, [], T.StructType([
             T.StructField("band", T.LongType()),
             T.StructField("_iid", id_type),
         ]))
@@ -705,7 +706,12 @@ class NearDupIndex:
         count (the small-files problem at 10^5 micro-batches) and the
         partition-listing cost per probe. Crash-safe via a roll-forward
         marker applied by every subsequent probe. Single-writer contract
-        as the lake: do not compact concurrently with ingest."""
+        as the lake: do not compact concurrently with ingest. A
+        ``band_buckets`` that differs from the index's ``_META.json``
+        raises before anything is folded (a fold would re-partition the
+        band table under the wrong layout)."""
+        _check_layout(self.fs, self.root, self._band_path,
+                      self.band_buckets)
         return {
             "sig_folded": _fold_partitions(spark, self._sig_path, upto_batch,
                                            self.fs),
@@ -825,11 +831,11 @@ class CosineDupIndex:
             return emb, band, _read_bandcnt(
                 spark, self._bandcnt_path, batch_id, band,
                 band_path=self._band_path, fs=self.fs)
-        empty_emb = spark.createDataFrame([], T.StructType([
+        empty_emb = local_frame(spark, [], T.StructType([
             T.StructField("_iid", id_type),
             T.StructField("_ie", emb_type),
         ]))
-        empty_band = spark.createDataFrame([], T.StructType([
+        empty_band = local_frame(spark, [], T.StructType([
             T.StructField("band", T.LongType()),
             T.StructField("_iid", id_type),
         ]))
@@ -947,7 +953,9 @@ class CosineDupIndex:
     # ------------------------------------------------------------------
     def compact(self, spark: SparkSession, upto_batch: int) -> dict:
         """Fold acked per-batch partitions (NearDupIndex.compact's
-        contract)."""
+        contract, layout check included)."""
+        _check_layout(self.fs, self.root, self._band_path,
+                      self.band_buckets)
         return {
             "emb_folded": _fold_partitions(spark, self._emb_path,
                                            upto_batch, self.fs),

@@ -4522,8 +4522,6 @@ REGISTRY: dict[str, tuple] = {
     "ann_cosine_topk": (q_ann_topk, SQL_ANN_TOPK),
     "ngram_jaccard_pairs": (q_ngram_jaccard, SQL_NGRAM_JACCARD),
     "materialize_blocks": (q_materialize_blocks, SQL_MATERIALIZE_BLOCKS),
-    "chunk_documents": (q_chunk_documents, SQL_CHUNK_DOCUMENTS),
-    "fim_transform": (q_fim_transform, SQL_FIM_TRANSFORM),
     "median_exact": (q_median_exact, SQL_MEDIAN_EXACT),
     "head_n": (q_head, SQL_HEAD),
     "rename_fields": (q_rename, SQL_RENAME),

@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def wants_big_heap_tuning(driver_memory: str) -> bool:
@@ -103,3 +104,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list,
+                schema: T.StructType) -> DataFrame:
+    """A small driver-side frame (``rows``: tuples in ``schema`` order)
+    planned as a ``LocalRelation`` (``LocalTableScan``), never as
+    ``spark.createDataFrame(list)``'s Python RDD (``Scan ExistingRDD``):
+    scanning or broadcasting that runs a job through Python workers on
+    every action. Non-empty rows cross as one Arrow table; an empty frame
+    comes from the JVM's ``createDataFrame(java.util.List, StructType)``,
+    which takes any schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not rows:
+        jspark = spark._jsparkSession
+        jdf = jspark.createDataFrame(spark._jvm.java.util.ArrayList(),
+                                     jspark.parseDataType(schema.json()))
+        return DataFrame(jdf, spark)
+    arrow_schema = to_arrow_schema(schema)
+    cols = zip(*rows)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

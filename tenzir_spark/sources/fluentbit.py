@@ -36,6 +36,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
+from tenzir_spark.session import local_frame
 from tenzir_spark.sources.msgpack import (
     Ext,
     MsgpackError,
@@ -305,7 +306,7 @@ def forward_listen(spark, host: str = "127.0.0.1", port: int = 0,
         [T.StructField("tag", T.StringType()),
          T.StructField("time", T.TimestampType()), *schema.fields])
     if not events:
-        return spark.createDataFrame([], full)
+        return local_frame(spark, [], full)
     tags, ns, recs = zip(*events)
     return spark.createDataFrame(_records_frame(tags, ns, recs, names), full)
 

@@ -237,6 +237,32 @@ def test_band_buckets_layout_mismatch_raises(spark, tmp_path):
             _docs(spark, [("e1", A)]), "text", "doc_id", 1)
 
 
+def test_compact_layout_mismatch_raises(spark, tmp_path):
+    """compact() on an instance whose band_buckets differs from the
+    index's _META.json raises the probe's layout error before folding
+    anything: the band table keeps its layout and stays probe-able."""
+    from tenzir_spark.operators.dedup_index import CosineDupIndex
+
+    root = str(tmp_path / "ndi")
+    for i, rows in enumerate([[("d1", A)], [("d2", B)]]):
+        NearDupIndex(root, band_buckets=8).ingest(
+            _docs(spark, rows), "text", "doc_id", i)
+    for wrong in (None, 16):
+        with pytest.raises(ValueError, match="band_buckets"):
+            NearDupIndex(root, band_buckets=wrong).compact(spark, 2)
+    assert sorted(os.listdir(os.path.join(root, "band"))) == [
+        "batch=0", "batch=1"]
+    r = NearDupIndex(root, band_buckets=8).ingest(
+        _docs(spark, [("e1", A), ("e2", C)]), "text", "doc_id", 2)
+    assert kept_ids(r) == ["e2"]
+
+    croot = str(tmp_path / "cdi")
+    CosineDupIndex(croot, dim=4, band_buckets=8).ingest(
+        _vecs(spark, [("v1", [1.0, 0.0, 0.0, 0.0])]), "emb", "vec_id", 0)
+    with pytest.raises(ValueError, match="band_buckets"):
+        CosineDupIndex(croot, dim=4).compact(spark, 1)
+
+
 def test_dotted_nested_paths(spark, tmp_path):
     """Nested (dotted) field paths — what the pipeline stages' path
     extractor produces — must work for id and content columns."""
