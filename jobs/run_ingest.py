@@ -63,13 +63,6 @@ def main() -> None:
                         "ANY event->partition routing, no keyed-topic "
                         "assumption, at a measured 20-35%% steady cost "
                         "(the barrier splits the scan's codegen span)")
-    p.add_argument("--collapse-mode", default="maxby",
-                   choices=["maxby", "semijoin"],
-                   help="LWW collapse strategy: 'maxby' (algebraic "
-                        "max_by(struct, lsn) partial agg; default — won "
-                        "the 4x4-executor A/B by 30%%, BASELINE.md) or "
-                        "'semijoin' (payload never shuffles; for sources "
-                        "whose payloads defeat partial aggregation)")
     p.add_argument("--master", default=None,
                    help="Spark master URL (e.g. spark://host:7077) for a "
                         "real multi-executor cluster; default local[cores]. "
@@ -135,7 +128,6 @@ def main() -> None:
     runner = IngestRunner(
         spark, args.warehouse, n_buckets=args.buckets, salt_buckets=args.salt,
         async_compact=args.async_compact, stats_mode=args.stats_mode,
-        collapse_mode=args.collapse_mode,
         exact_watermarks=args.exact_watermarks,
         retain_snapshots=args.retain_snapshots,
         sorted_compaction=args.sorted_compaction,

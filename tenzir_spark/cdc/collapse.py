@@ -34,51 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def collapse_lww_semijoin(
-    batch: DataFrame,
-    key: str = "doc_id",
-    order: str = "lsn",
-) -> DataFrame:
-    """LWW collapse that never shuffles the heavy payload.
-
-    Token arrays dominate a change event (~97% of the bytes). The struct
-    max_by path shuffles them once (partial-agg rows); this variant
-    shuffles only (key, order, row-identity):
-
-      1. winner identity per key from a COLUMN-PRUNED scan — the parquet
-         reader materializes just key+order+_metadata (row_index,
-         file_path): ~3% of the batch bytes move through the exchange;
-      2. broadcast the winner identities and hash-semi-join the full scan
-         on the deterministic row identity — the payload goes scan→write
-         with ZERO exchange.
-
-    Dedup of exact redeliveries (same lsn twice) falls out: one row
-    identity survives per key. The winner set must fit a broadcast for the
-    payload to stay exchange-free; rather than FORCING the broadcast (an
-    oversized winner set would OOM the driver), the join is left unhinted
-    and AQE converts it to a broadcast join at runtime from the actual
-    shuffle size of the winners side — small batches get the broadcast
-    plan, a pathological batch degrades to a (correct, payload-shuffling)
-    hash join instead of failing. session.py raises
-    ``spark.sql.adaptive.autoBroadcastJoinThreshold`` so typical winner
-    sets (tens of MB of (file, row) pairs) still convert. Measured
-    (1M-event, 160-token batches, local[32], tmpfs): ~35% less wall and
-    ~2× less memory traffic than struct max_by."""
-    ident = [F.col("_metadata.file_path").alias("_fp"),
-             F.col("_metadata.row_index").alias("_ri")]
-    slim = batch.select(F.col(key).alias("_k"), F.col(order).alias("_o"), *ident)
-    winners = (
-        slim.groupBy("_k")
-        .agg(F.max_by(F.struct("_fp", "_ri"), F.struct("_o", "_ri")).alias("_w"))
-        .select(F.col("_w._fp").alias("_fp"), F.col("_w._ri").alias("_ri"))
-    )
-    full = batch.select("*", *ident)
-    return (
-        full.join(winners, on=["_fp", "_ri"], how="left_semi")
-        .drop("_fp", "_ri")
-    )
-
-
 def collapse_lww(
     batch: DataFrame,
     key: str = "doc_id",

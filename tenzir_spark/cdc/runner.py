@@ -25,7 +25,6 @@ This is the engine the north rule asks for. Each micro-batch:
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -154,7 +153,6 @@ class IngestRunner:
         compact_ratio: float = 0.5,
         compact_max_commits: int = 64,
         async_compact: bool = False,
-        collapse_mode: str = "maxby",
         stats_mode: str = "full",
         delta_codec: str = "zstd",
         exact_watermarks: bool = False,
@@ -214,10 +212,6 @@ class IngestRunner:
         # one warehouse in a long-lived process (tests, notebooks) don't
         # need explicit releases; the one-shot CLI turns it ON.
         self.writer_lease = writer_lease
-        # "maxby" (algebraic partial-agg; default) or "semijoin" (payload
-        # never shuffles; needs file-backed input for _metadata row ids and
-        # a broadcastable winner set — see collapse.py for the trade-off)
-        self.collapse_mode = collapse_mode
         # "full": a column-pruned stats job over the raw batch runs in a
         # side thread (events_in counts stale deliveries too; watermarks
         # are exact for ANY event→partition assignment).
@@ -242,8 +236,6 @@ class IngestRunner:
         # rows — measured 20-35% steady-throughput cost on the sf0.1
         # bench, which is why it is OFF by default and "full" is the
         # recommended non-keyed mode.
-        # "winners" falls back to "full" under collapse_mode="semijoin"
-        # (the semi join keeps no count column).
         self.stats_mode = stats_mode
         self.exact_watermarks = exact_watermarks
 
@@ -262,12 +254,11 @@ class IngestRunner:
         snapshot version: the two counters diverge permanently after any
         aborted commit (noop-abort redelivery, empty compaction)."""
         import numpy as np
-        import pyarrow.parquet as pq
 
         counts: dict[int, int] = {}
         for e in self.table.snapshot()["files"]:
             if e.get("kind") == "delta" and e["commit"] == cid:
-                col = pq.read_table(
+                col = self.fs.parquet_read(
                     os.path.join(self.table.root, e["path"]), columns=[PART_COL]
                 )[PART_COL].to_numpy(zero_copy_only=False)
                 for p, c in zip(*np.unique(col[col != None], return_counts=True)):  # noqa: E711
@@ -391,22 +382,23 @@ class IngestRunner:
         # derive the batch schema from one parquet footer driver-side —
         # saves the per-batch schema-inference listing job (the files of
         # one batch are written together and share a schema; evolution
-        # shows up in the footer just the same)
-        import glob as _glob
-
-        import pyarrow.parquet as pq
+        # shows up in the footer just the same). Footers are read through
+        # ``fs``, each at most once.
         from pyspark.sql.pandas.types import from_arrow_schema
 
         files = (
             [path] if path.endswith(".parquet")
-            else sorted(_glob.glob(os.path.join(path, "*.parquet")))
+            else [os.path.join(path, fn) for fn in sorted(self.fs.listdir(path))
+                  if fn.endswith(".parquet")]
         )
+        winners = self.stats_mode == "winners"
+        mds = [self.fs.parquet_metadata(f)
+               for f in (files if winners else files[:1])]
         reader = self.spark.read
-        if files:
-            schema = from_arrow_schema(pq.read_schema(files[0]))
-            reader = reader.schema(schema)
+        if mds:
+            reader = reader.schema(from_arrow_schema(mds[0].schema.to_arrow_schema()))
         delivered = None
-        if self.stats_mode == "winners":
+        if winners:
             # winners mode only sees fresh/winner events; recover the exact
             # per-partition DELIVERED counts (incl. stale redeliveries)
             # from the input parquet footers — driver-side metadata, no
@@ -415,8 +407,7 @@ class IngestRunner:
             # row group voids the recovery and metrics degrade to the
             # documented fresh-only fallback.
             delivered = {}
-            for f in files:
-                md = pq.read_metadata(f)
+            for md in mds:
                 pi = md.schema.names.index("part_id") if "part_id" in md.schema.names else None
                 for rg in range(md.num_row_groups):
                     g = md.row_group(rg)
@@ -430,8 +421,8 @@ class IngestRunner:
                     break
         st = self.apply_batch_df(reader.parquet(path), batch_id,
                                  delivered_by_part=delivered)
-        if self.stats_mode == "winners" and files:
-            st["events_in"] = sum(pq.read_metadata(f).num_rows for f in files)
+        if winners and mds:
+            st["events_in"] = sum(md.num_rows for md in mds)
         return st
 
     def apply_batch_df(self, raw: DataFrame, batch_id: int,
@@ -446,7 +437,7 @@ class IngestRunner:
         to report full-mode-comparable events_in (see METRICS_SCHEMA)."""
         t0 = time.monotonic()
         wm = self.watermarks()
-        use_winners = self.stats_mode == "winners" and self.collapse_mode != "semijoin"
+        use_winners = self.stats_mode == "winners"
 
         # -- idempotence: only events strictly above the committed
         # watermark. The watermark table rides a BROADCAST join, not a
@@ -460,11 +451,6 @@ class IngestRunner:
         # broadcast on every batch. Codegen reuse re-measured with the
         # LocalRelation (cdcbench narrow_rows, 4 cores, traced): 28-38 ms
         # of compile time per batch, against 57-109 ms with the Python RDD.
-        if self.collapse_mode == "semijoin":
-            # the semijoin collapse needs the file-source _metadata
-            # pseudo-column, which does not survive a join — materialize
-            # it as a regular column first
-            raw = raw.select("*", "_metadata")
         wm_rows = [(int(k), int(v)) for k, v in wm.items()]
         wm_df = local_frame(self.spark, wm_rows, T.StructType([
             T.StructField("part_id", T.IntegerType(), False),
@@ -551,7 +537,7 @@ class IngestRunner:
         table_schema = self.table.schema()
         batch_payload = [
             f for f in raw.schema.fields
-            if f.name not in CONTROL_COLS and f.name not in ("_wm", "_metadata")
+            if f.name not in CONTROL_COLS and f.name != "_wm"
         ]
         new_fields = [f for f in batch_payload if f.name not in table_schema.names]
         widened = {}
@@ -600,14 +586,9 @@ class IngestRunner:
                 batch_id,
             )
         data = raw.filter(is_fresh & applicable).drop("_wm")
-        if self.collapse_mode == "semijoin":
-            from tenzir_spark.cdc.collapse import collapse_lww_semijoin
-
-            collapsed = collapse_lww_semijoin(data, key=self.key, order="lsn")
-        else:
-            collapsed = collapse_lww(data, key=self.key, order="lsn",
-                                     salt_buckets=self.salt_buckets,
-                                     count_col=NEV_COL if use_winners else None)
+        collapsed = collapse_lww(data, key=self.key, order="lsn",
+                                 salt_buckets=self.salt_buckets,
+                                 count_col=NEV_COL if use_winners else None)
         # merge-on-read delta: payload aligned to the (possibly evolved)
         # schema + bucket + tombstone flag + source-partition lineage.
         # ONE Spark job (collapse→write); rows/buckets/lineage come from
@@ -755,13 +736,12 @@ class IngestRunner:
         (``_part``/``_lsn``/``_n_ev``) — microseconds of pyarrow against a
         second Spark job over the batch."""
         import numpy as np
-        import pyarrow.parquet as pq
 
         applied: dict[int, int] = {}
         fresh: dict[int, int] = {}
         wmax: dict[int, int] = {}
         for e in entries:
-            tbl = pq.read_table(
+            tbl = self.fs.parquet_read(
                 os.path.join(self.table.root, e["path"]),
                 columns=[PART_COL, LSN_COL, NEV_COL],
             )
@@ -849,8 +829,10 @@ class IngestRunner:
         table (watermark idempotence)."""
         self.ensure_table()
         files = sorted(
-            p for p in glob.glob(os.path.join(changes_dir, "batch-*"))
-            if os.path.isdir(p) or p.endswith(".parquet")
+            p for p in (os.path.join(changes_dir, fn)
+                        for fn in self.fs.listdir(changes_dir)
+                        if fn.startswith("batch-"))
+            if p.endswith(".parquet") or self.fs.isdir(p)
         )
         if max_batches is not None:
             files = files[: start_batch + max_batches]

@@ -121,10 +121,13 @@ class LocalFS:
 
         return pq.read_table(path, columns=[column])[column].to_pylist()
 
-    def parquet_read(self, path: str, columns: list[str] | None = None):
+    def parquet_read(self, path: str, columns: list[str] | None = None,
+                     filters=None):
+        """``filters``: a pyarrow filter (expression or DNF list); row
+        groups whose min/max statistics exclude it are skipped."""
         import pyarrow.parquet as pq
 
-        return pq.read_table(path, columns=columns)
+        return pq.read_table(path, columns=columns, filters=filters)
 
     def parquet_write(self, table, path: str) -> None:
         import pyarrow.parquet as pq
@@ -306,10 +309,12 @@ class ArrowFS:
         return pq.read_table(
             path, columns=[column], filesystem=self._fs)[column].to_pylist()
 
-    def parquet_read(self, path: str, columns: list[str] | None = None):
+    def parquet_read(self, path: str, columns: list[str] | None = None,
+                     filters=None):
         import pyarrow.parquet as pq
 
-        return pq.read_table(path, columns=columns, filesystem=self._fs)
+        return pq.read_table(path, columns=columns, filters=filters,
+                             filesystem=self._fs)
 
     def parquet_write(self, table, path: str) -> None:
         import pyarrow.parquet as pq

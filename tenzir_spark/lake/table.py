@@ -28,7 +28,12 @@ At 100 TB: the manifest lists O(n_buckets × commits) files; `expire` /
 `compact` (rewrite_data_files analog) bound that.  Reads of a snapshot pass
 the explicit file list to the Parquet scan, so Spark still gets row-group
 pruning, predicate pushdown, and column pruning; selecting only touched
-buckets is manifest-level partition pruning, same as Iceberg.
+buckets is manifest-level partition pruning, same as Iceberg.  A point
+lookup plans no Spark query at all: it prunes the manifest to the key's
+bucket, reads only that key's rows from the selected files on the driver
+(pyarrow, row groups skipped by their min/max statistics) and resolves
+them there — the reference's catalog-pruned point query
+(libtenzir/src/catalog.cpp:119-171).
 """
 
 from __future__ import annotations
@@ -61,6 +66,20 @@ _ROW_SETTERS = {
     T.TimestampNTZType: "setLong", T.FloatType: "setFloat",
     T.DoubleType: "setDouble",
 }
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every level nullable — what Spark's file scan makes of
+    a user-supplied read schema."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType),
+                                           True, f.metadata)
+                             for f in dt.fields])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def _jvm_xxhash64(spark: SparkSession, value, field: T.StructField) -> int | None:
@@ -336,9 +355,12 @@ class LakeTable:
     def _read_schema(
         self, payload_schema: T.StructType, with_deleted: bool = False
     ) -> T.StructType:
-        fields = list(payload_schema.fields)
-        fields.append(T.StructField(BUCKET_COL, T.IntegerType(), True))
+        """The schema ``read`` returns: the payload, all nullable, then
+        ``_commit`` and ``_bucket`` (the base-file scan's order: physical
+        columns, then the ``_bucket=K`` partition column)."""
+        fields = list(_nullable(payload_schema).fields)
         fields.append(T.StructField(COMMIT_COL, T.LongType(), True))
+        fields.append(T.StructField(BUCKET_COL, T.IntegerType(), True))
         if with_deleted:
             fields.append(T.StructField(DELETED_COL, T.BooleanType(), True))
             fields.append(T.StructField(PART_COL, T.IntegerType(), True))
@@ -387,6 +409,16 @@ class LakeTable:
         deltas = [e for e in entries if e.get("kind") == "delta"]
         return base, deltas
 
+    @staticmethod
+    def _in_buckets(entries: list[dict], bset: set[int]) -> list[dict]:
+        """Manifest pruning: the base files of the buckets in ``bset`` and
+        the delta files whose bucket synopsis meets it."""
+        return [
+            e for e in entries
+            if (e.get("kind", "base") == "base" and e["bucket"] in bset)
+            or (e.get("kind") == "delta" and bset & set(e["buckets"]))
+        ]
+
     def read(self, spark: SparkSession, buckets: list[int] | None = None,
              version: int | None = None) -> DataFrame:
         """Table state — current, or AS OF an older snapshot (``version``:
@@ -399,42 +431,25 @@ class LakeTable:
         cold buckets stream through with zero shuffle (the manifest's
         per-delta bucket list is our partition-pruning synopsis, reference
         analog: catalog pruning, libtenzir/src/catalog.cpp:119-171)."""
-        return self._read(spark, self.snapshot(version), buckets)
-
-    def _read(self, spark: SparkSession, snap: dict,
-              buckets: list[int] | None = None,
-              key_eq: F.Column | None = None) -> DataFrame:
-        """``read`` of the manifest ``snap``. ``key_eq`` (a predicate on
-        the key column only) filters every scan BELOW the LWW resolve:
-        the resolve groups by the key, so dropping other keys first
-        changes no winner, and only the matching key's rows shuffle."""
+        snap = self.snapshot(version)
         schema = T.StructType.fromJson(snap["schema"])
         entries = snap["files"]
         if buckets is not None:
-            bset = set(buckets)
-            entries = [
-                e for e in entries
-                if (e.get("kind", "base") == "base" and e["bucket"] in bset)
-                or (e.get("kind") == "delta" and bset & set(e["buckets"]))
-            ]
-
-        def keyed(df: DataFrame) -> DataFrame:
-            return df if key_eq is None else df.filter(key_eq)
-
+            entries = self._in_buckets(entries, set(buckets))
         base, deltas = self._split_entries(entries)
         if not deltas:
-            return keyed(self.read_files(spark, base, schema))
+            return self.read_files(spark, base, schema)
         key = snap.get("key", "doc_id")
         hot = set()
         for e in deltas:
             hot.update(e["buckets"])
         cold_base = [e for e in base if e["bucket"] not in hot]
         hot_base = [e for e in base if e["bucket"] in hot]
-        resolved = self._resolve(spark, hot_base, deltas, schema, key, key_eq)
+        resolved = self._resolve(spark, hot_base, deltas, schema, key)
         if buckets is not None:
             # delta files span buckets; keep only the requested ones
-            resolved = resolved.filter(F.col(BUCKET_COL).isin(list(bset)))
-        cold = keyed(self.read_files(spark, cold_base, schema))
+            resolved = resolved.filter(F.col(BUCKET_COL).isin(list(buckets)))
+        cold = self.read_files(spark, cold_base, schema)
         return cold.unionByName(resolved)
 
     def bucket_of(self, spark: SparkSession, value, version: int | None = None) -> int:
@@ -462,24 +477,59 @@ class LakeTable:
 
     def lookup(self, spark: SparkSession, value,
                version: int | None = None) -> DataFrame:
-        """Bucket-pruned point lookup on the primary key: hash the value
-        to its bucket and read ONLY that bucket's base files + the deltas
-        touching it — at 10^9 keys this scans 1/n_buckets of the table
-        instead of all of it (the reference's catalog-pruned point query,
-        catalog.cpp:119-171; Iceberg bucket-transform partition pruning).
-        The key equality sits on each scan, below the LWW resolve, so
-        parquet gets it as a pushed filter and only that key's rows
-        reach the resolve's shuffle."""
+        """Point lookup on the primary key, resolved on the driver with
+        no Spark job (the reference answers point queries from catalog
+        metadata the same way, catalog.cpp:119-171). The value hashes to
+        its bucket (``bucket_of``); the manifest gives that bucket's base
+        files and the delta files whose synopsis lists it; each is read
+        through ``fs`` with an equality filter on the key, so parquet
+        row-group statistics skip row groups (all but ~one in a
+        key-sorted fold) and only the key's rows decode. The rows then
+        resolve as ``read`` resolves them: if a delta lists the bucket,
+        the highest ``_commit`` wins and a winning tombstone returns no
+        row. The result is a ``LocalTableScan`` frame with ``read``'s
+        schema; ``version`` reads that snapshot."""
+        import math
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_type
+
         # pin the version ONCE: with version=None, resolving HEAD inside
         # bucket_of and again for the read races a concurrent rebucket —
         # the hash would use one spec and the manifest pruning another,
         # silently missing a present key
         v = self.current_version() if version is None else version
         snap = self.snapshot(v)
+        schema = T.StructType.fromJson(snap["schema"])
         key = snap.get("key", "doc_id")
         b = self.bucket_of(spark, value, v)
-        return self._read(spark, snap, buckets=[b],
-                          key_eq=F.col(key) == F.lit(value))
+        dt = schema[key].dataType
+        if isinstance(value, float) and math.isnan(value):
+            match = pc.field(key).is_nan()  # Spark's NaN = NaN is true
+        else:
+            match = pc.field(key) == pa.scalar(dt.toInternal(value),
+                                               to_arrow_type(dt))
+        base, deltas = self._split_entries(
+            self._in_buckets(snap["files"], {b}))
+        wanted = [*schema.names, DELETED_COL, COMMIT_COL]
+        rows = []
+        for e in base + deltas:
+            path = os.path.join(self.root, e["path"])
+            present = set(self.fs.parquet_metadata(path)
+                          .schema.to_arrow_schema().names)
+            tbl = self.fs.parquet_read(
+                path, columns=[c for c in wanted if c in present],
+                filters=match)
+            # a delta file's _commit is its directory, not a column
+            rows += [{COMMIT_COL: e["commit"], **r} for r in tbl.to_pylist()]
+        if deltas and rows:
+            rows = [max(rows, key=lambda r: r[COMMIT_COL])]
+        out = self._read_schema(schema)
+        return local_frame(spark, [
+            tuple({**r, BUCKET_COL: b}.get(f.name) for f in out.fields)
+            for r in rows if not r.get(DELETED_COL)
+        ], out)
 
     def _resolve(
         self,
@@ -488,16 +538,12 @@ class LakeTable:
         deltas: list[dict],
         schema: T.StructType,
         key: str,
-        key_eq: F.Column | None = None,
     ) -> DataFrame:
         """Merge-on-read LWW: per key keep the row from the highest commit,
         then drop tombstones. Algebraic ``max_by`` → map-side partial
-        aggregation; only hot-bucket rows shuffle. ``key_eq`` (see
-        ``_read``) filters both scans before the resolve."""
+        aggregation; only hot-bucket rows shuffle."""
         base_df = self.read_files(spark, hot_base, schema, with_deleted=True)
         delta_df = self.read_files(spark, deltas, schema, with_deleted=True)
-        if key_eq is not None:
-            base_df, delta_df = base_df.filter(key_eq), delta_df.filter(key_eq)
         both = base_df.unionByName(delta_df)
         cols = both.columns
         winner = (
@@ -521,8 +567,8 @@ class LakeTable:
         ~one file per bucket (bounded file counts at scale).
 
         ``sort_col`` (compaction passes the primary key) sorts rows WITHIN
-        each bucket file — Iceberg sort-order analog. Point lookups push an
-        equality filter to the scan; with key-sorted row groups the
+        each bucket file — Iceberg sort-order analog. Point lookups read
+        with an equality filter on the key; with key-sorted row groups the
         parquet min/max statistics prune every non-matching row group, so
         a lookup reads ~one row group instead of the whole bucket file.
         The dynamic-partition writer's required ordering (``_bucket``) is a

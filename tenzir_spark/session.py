@@ -65,12 +65,13 @@ def get_spark(
         # so it plans as SortAggregateExec (partial aggs sort full rows
         # including token arrays; see the G1 region note below).
         .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-        # semijoin-mode LWW collapse leaves its winner-set join UNhinted and
-        # relies on AQE's runtime conversion: typical winner sets (a few
-        # hundred MB of (file_path, row_index) pairs per 10^6-key batch)
-        # must still convert to broadcast for the payload to stay
-        # exchange-free, while a pathological batch degrades to a hash join
-        # instead of OOMing the driver (the fallback ADVICE asked for)
+        # Unhinted joins against a side that is only small at runtime (the
+        # batch key set of a copy-on-write MERGE, lake/merge.py; the dedup
+        # operators' winner and loser sets; enrich context tables) rely on
+        # AQE's runtime conversion: sides of up to a few hundred MB still
+        # convert to broadcast, so the large side joins without a shuffle,
+        # while a pathological side degrades to a hash join instead of
+        # OOMing the driver, as a forced broadcast hint would
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
         .config("spark.sql.session.timeZone", "UTC")
         # Python workers (mapInPandas/pandas UDFs) inherit the same glibc

@@ -212,13 +212,6 @@ def test_extreme_hot_key_skew(spark, tmp_path):
     assert_state_equal(_engine_state(r2), oracle)
 
 
-def test_semijoin_collapse_mode_matches_oracle(spark, changes_dir, oracle, tmp_path):
-    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=8,
-                     collapse_mode="semijoin")
-    r.run(changes_dir)
-    assert_state_equal(_engine_state(r), oracle)
-
-
 def test_lineage_survives_cid_version_divergence(spark, changes_dir, tmp_path):
     """A noop-aborted redelivery burns a commit id without bumping the
     snapshot version; per-partition lineage for LATER batches must still

@@ -1,15 +1,15 @@
-"""LWW collapse variants: algebraic max_by vs payload-shuffle-free
-semijoin — identical semantics (winner = max lsn per key, exact-dup
-redeliveries collapse to one row)."""
+"""LWW collapse variants: single-phase and salted two-phase max_by —
+identical semantics (winner = max lsn per key, exact-dup redeliveries
+collapse to one row)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from tenzir_spark.cdc.collapse import collapse_lww, collapse_lww_semijoin
+from tenzir_spark.cdc.collapse import collapse_lww
 
 
 @pytest.fixture()
-def batch(spark, tmp_path):
+def batch(spark):
     rows = [
         # key, lsn, payload  — includes exact dup (same lsn twice) and
         # delete-then-insert interleaving
@@ -17,10 +17,7 @@ def batch(spark, tmp_path):
         ("b", 2, [2]), ("b", 9, None),
         ("c", 7, [7]),
     ]
-    df = spark.createDataFrame(rows, "doc_id string, lsn long, tokens array<int>")
-    p = str(tmp_path / "batch.parquet")
-    df.write.parquet(p)  # semijoin needs file-backed _metadata row identity
-    return spark.read.parquet(p)
+    return spark.createDataFrame(rows, "doc_id string, lsn long, tokens array<int>")
 
 
 def _norm(df):
@@ -31,22 +28,4 @@ def test_variants_equivalent(spark, batch):
     expect = [("a", 5, (5, 5)), ("b", 9, ()), ("c", 7, (7,))]
     assert _norm(collapse_lww(batch)) == expect
     assert _norm(collapse_lww(batch, salt_buckets=8)) == expect
-    assert _norm(collapse_lww_semijoin(batch)) == expect
 
-
-def test_semijoin_no_payload_shuffle(spark, batch):
-    """The exchange must carry only control columns: tokens appear in the
-    plan's exchanges zero times."""
-    import io
-    from contextlib import redirect_stdout
-
-    out = collapse_lww_semijoin(batch)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    txt = buf.getvalue()
-    for line in txt.splitlines():
-        if "Exchange" in line and "Input" in line:
-            assert "tokens" not in line
-    # and the heavy side joins via BroadcastHashJoin (no sort-merge)
-    assert "BroadcastHashJoin" in txt

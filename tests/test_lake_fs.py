@@ -139,6 +139,37 @@ def test_cdc_runner_over_arrow_fs(spark, tmp_path):
     assert r_arrow.read_metrics().count() > 0
 
 
+def test_lookup_reads_only_through_fs(spark, tmp_path, monkeypatch):
+    """A point lookup opens data files only through ``fs``: over a
+    SubTreeFileSystem the engine's paths are relative to the store root
+    and name no local file, so a bare pyarrow read of one fails."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyarrow.fs import LocalFileSystem, SubTreeFileSystem
+
+    store = tmp_path / "store"
+    store.mkdir()
+    monkeypatch.chdir(tmp_path)  # "wh/..." resolves to nothing here
+    fs = ArrowFS(SubTreeFileSystem(str(store), LocalFileSystem()),
+                 spark_prefix=f"{store}/")
+    t = LakeTable("wh", "t", fs=fs)
+    t.create(SCHEMA, n_buckets=4)
+    t.append(spark.createDataFrame([(f"d{i}", i) for i in range(20)],
+                                   SCHEMA), "doc_id")
+    delta = spark.createDataFrame([("d1", 100), ("d2", None)], SCHEMA).select(
+        "*", t.bucket_expr("doc_id").alias("_bucket"),
+        (F.col("doc_id") == "d2").alias("_deleted"))
+    t.delta_commit(delta, schema=SCHEMA, properties={})
+    some_file = os.path.join(t.root, t.snapshot()["files"][0]["path"])
+    with pytest.raises(FileNotFoundError):
+        pq.read_table(some_file)
+    assert [r["n_tok"] for r in t.lookup(spark, "d1").collect()] == [100]
+    assert [r["n_tok"] for r in t.lookup(spark, "d7").collect()] == [7]
+    assert t.lookup(spark, "d2").collect() == []
+    assert t.lookup(spark, "nope").collect() == []
+
+
 # ---------------------------------------------------------------------------
 # 2. manifest/state protocol on the in-memory mock — zero POSIX
 # ---------------------------------------------------------------------------
@@ -257,16 +288,18 @@ def test_atomic_write_and_listing(proto_fs):
 
 
 def test_no_bare_posix_on_manifest_path():
-    """lake/table.py and operators/dedup_index.py must route every
-    filesystem touch through LakeFS — only pure path-STRING helpers
-    (os.path.join/relpath/dirname, os.sep) may remain."""
+    """lake/table.py, cdc/runner.py and operators/dedup_index.py must
+    route every filesystem touch through LakeFS — only pure path-STRING
+    helpers (os.path.join/relpath/dirname, os.sep) may remain."""
+    import tenzir_spark.cdc.runner as runner
     import tenzir_spark.lake.table as tbl
     import tenzir_spark.operators.dedup_index as di
 
     allowed = re.compile(
         r"os\.path\.(join|relpath|dirname)|os\.sep")
-    banned = re.compile(r"\bshutil\.|(?<![\w.])open\(|\bos\.[a-z]")
-    for mod in (tbl, di):
+    banned = re.compile(
+        r"\bshutil\.|(?<![\w.])open\(|\bos\.[a-z]|\bglob\.|\bpq\.")
+    for mod in (tbl, runner, di):
         src = open(mod.__file__).read()
         for i, line in enumerate(src.splitlines(), 1):
             stripped = allowed.sub("", line)

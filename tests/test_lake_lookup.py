@@ -170,29 +170,144 @@ def _delta(spark, t, rows, deleted=False):
         DELETED_COL, F.lit(deleted))
 
 
+def _job_ids_consumed(spark, action) -> int:
+    """Spark job ids ``action`` consumes, from the job id a probe job gets
+    before and after it (covers jobs started on any thread)."""
+    sc = spark.sparkContext
+
+    def probe(tag):
+        sc.setJobGroup(tag, tag)
+        spark.range(1).count()  # may run more than one job
+        return sc.statusTracker().getJobIdsForGroup(tag)
+
+    before = max(probe("probe-before"))
+    action()
+    after = min(probe("probe-after"))
+    sc.setJobGroup("", "")
+    return after - before - 1
+
+
 def test_lookup_and_read_plans_are_key_local(spark, tmp_path):
     t = LakeTable(str(tmp_path), "t_plan")
     t.create(SCHEMA, n_buckets=4)
     t.append(local_frame(spark, [(f"d{i}", [i]) for i in range(40)],
                          SCHEMA), key_col="doc_id")
+    b3 = t.bucket_of(spark, "d3")
+    other = next(f"d{i}" for i in range(40) if t.bucket_of(spark, f"d{i}") != b3)
     t.delta_commit(_delta(spark, t, [("d3", [99]), ("d5", [55])]),
                    schema=SCHEMA, properties={})
+    t.delta_commit(_delta(spark, t, [(other, [7])]),  # bucket pruned
+                   schema=SCHEMA, properties={})
 
-    look = t.lookup(spark, "d3")
-    plan = _plan(look)
-    assert "ExistingRDD" not in plan, plan
-    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-    assert len(scans) == 2, plan  # the bucket's base file and the delta
-    for ln in scans:
-        pushed = ln.split("PushedFilters: [", 1)[1].split("]", 1)[0]
-        assert "EqualTo(doc_id,d3)" in pushed, ln
-    assert [r["tokens"] for r in look.collect()] == [[99]]
+    opened = []
+    read_file = t.fs.parquet_read
+    t.fs.parquet_read = lambda path, *a, **k: (opened.append(path),
+                                               read_file(path, *a, **k))[1]
+    got = []
+    assert _job_ids_consumed(
+        spark, lambda: got.extend(t.lookup(spark, "d3").collect())) == 0
+    del t.fs.parquet_read
+    assert [r["tokens"] for r in got] == [[99]]
+    snap = t.snapshot()
+    want = {os.path.join(t.root, e["path"]) for e in snap["files"]
+            if e.get("bucket") == b3 or b3 in e.get("buckets", [])}
+    assert sorted(opened) == sorted(want), opened
+    assert len(want) >= 2 and len(want) < len(snap["files"])
+    plan = _plan(t.lookup(spark, "d3"))
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
     for df in (t.read(spark), t.read(spark, buckets=[0]),
                t.read_changes(spark, t.current_version())):
         assert "ExistingRDD" not in _plan(df), _plan(df)
     assert t.read_changes(spark, t.current_version()).count() == 0
     assert t.read(spark).count() == 40
+
+
+# --------------------------------------------------- lookup == read()
+
+
+def _keyed(t, spark, version):
+    """``read(version)`` grouped by key: the reference every lookup must
+    equal, with its schema."""
+    df = t.read(spark, version=version)
+    rows = {}
+    for r in df.collect():
+        rows.setdefault(r["doc_id"], []).append(r.asDict(recursive=True))
+    return df.schema, rows
+
+
+def test_lookup_equals_read(spark, tmp_path):
+    """Base files, a fold, pending deltas, tombstones (one re-inserted),
+    a column added mid-stream and an int column widened to long: for
+    every key and every snapshot, ``lookup`` returns exactly the rows and
+    the schema of ``read().filter(key == k)``."""
+    s0 = T.StructType([T.StructField("doc_id", T.StringType(), False),
+                       T.StructField("n", T.IntegerType(), True),
+                       T.StructField("tokens", T.ArrayType(T.IntegerType()))])
+    s1 = T.StructType([T.StructField("doc_id", T.StringType(), False),
+                       T.StructField("n", T.LongType(), True),
+                       T.StructField("tokens", T.ArrayType(T.IntegerType())),
+                       T.StructField("extra", T.StringType(), True)])
+    t = LakeTable(str(tmp_path), "t_eq")
+    t.create(s0, n_buckets=4)
+    t.append(local_frame(spark, [(f"d{i}", i, [i] * (i % 3))
+                                 for i in range(30)], s0), key_col="doc_id")
+
+    def delta(schema, rows, deleted=()):
+        df = local_frame(spark, rows, schema)
+        return df.withColumn(BUCKET_COL, t.bucket_expr("doc_id")).withColumn(
+            DELETED_COL, F.col("doc_id").isin(list(deleted) or [""]))
+
+    t.delta_commit(delta(s0, [("d1", 100, [1]), ("d2", 200, None),
+                              ("d40", 40, [4, 0])]),
+                   schema=s0, properties={})
+    t.compact(spark)
+    t.delta_commit(delta(s1, [("d2", None, None, None),
+                              ("d4", 2**40, [4], "x"),
+                              ("d41", 41, [], "y")], deleted=["d2"]),
+                   schema=s1, properties={})
+    t.delta_commit(delta(s1, [("d5", None, None, None),
+                              ("d2", 7, [2], "back"),
+                              ("d1", 101, None, None)], deleted=["d5"]),
+                   schema=s1, properties={})
+    t.delta_commit(delta(s1, [("d4", 5, [5, 5], None)]),
+                   schema=s1, properties={})
+    assert len(t._split_entries(t.snapshot()["files"])[1]) >= 3
+
+    keys = [f"d{i}" for i in range(42)] + ["", "nope", "d1 ", None]
+    head = t.current_version()
+    for v in range(1, head + 1):
+        schema, rows = _keyed(t, spark, v)
+        for k in keys:
+            look = t.lookup(spark, k, version=v)
+            assert look.schema == schema, (v, k, look.schema, schema)
+            got = [r.asDict(recursive=True) for r in look.collect()]
+            assert got == rows.get(k, []), (v, k, got)
+    _, rows = _keyed(t, spark, head)
+    assert "d2" in rows and "d5" not in rows and rows["d4"][0]["n"] == 5
+    assert t.lookup(spark, "d1").schema == \
+        t.read(spark).filter(F.col("doc_id") == "d1").schema
+
+
+def test_lookup_float_keys_match_spark_equality(spark, tmp_path):
+    """Spark's ``=`` holds for NaN = NaN and -0.0 = 0.0; pyarrow's
+    ``==`` is false for NaN, so the lookup filters NaN with ``is_nan``."""
+    s = T.StructType([T.StructField("k", T.DoubleType(), False),
+                      T.StructField("v", T.LongType(), True)])
+    t = LakeTable(str(tmp_path), "t_f")
+    t.create(s, n_buckets=N_BUCKETS, key="k")
+    t.append(local_frame(spark, [(0.0, 1), (1.5, 2), (float("nan"), 3),
+                                 (-2.0, 4)], s), key_col="k")
+    t.delta_commit(local_frame(spark, [(float("nan"), 30), (1.5, 20)], s)
+                   .withColumn(BUCKET_COL, t.bucket_expr("k"))
+                   .withColumn(DELETED_COL, F.lit(False)),
+                   schema=s, properties={})
+    for k in (float("nan"), 0.0, -0.0, 1.5, -2.0, 9.0):
+        want = t.read(spark).filter(F.col("k") == F.lit(k))
+        look = t.lookup(spark, k)
+        assert look.schema == want.schema
+        assert sorted(map(str, look.collect())) == \
+            sorted(map(str, want.collect())), k
 
 
 def test_apply_batch_plans_have_no_python_rdd(spark, tmp_path):
