@@ -214,19 +214,6 @@ def main() -> None:
             generate_changes(changes, n_events=n_events, n_docs=n_events // 10,
                              n_parts=2 * cores, n_batches=n_batches, seed=42,
                              token_len=(64, 256))
-        # winners stats mode: ONE Spark job per batch (watermarks/lineage
-        # ride the delta files' int side-channel columns instead of a
-        # second stats job that contends for the same 32 cores). Its
-        # exactness precondition — keyed routing, every key lives in one
-        # source partition — is the changegen's contract, satisfied here;
-        # "full" remains the engine default for sources without that
-        # guarantee (measured r3: winners 160k vs full 137k ev/s steady).
-        stats_mode = os.environ.get("BENCH_STATS_MODE", "winners")
-        # exact_watermarks (Observation-based per-partition maxes) removes
-        # the keyed-routing precondition but its CollectMetrics barrier
-        # costs 20-35% steady throughput — the changegen IS keyed, so the
-        # bench default stays off; flip BENCH_EXACT_WM=1 to A/B it.
-        exact_wm = os.environ.get("BENCH_EXACT_WM", "0") != "0"
         # CDC warmup: replay the first batches of the SAME change log into a
         # throwaway warehouse. The generic session warmup above covers the
         # scan/write/max_by first-use costs, but the CDC loop has its own:
@@ -237,8 +224,7 @@ def main() -> None:
         # floor). Untimed, identical shape, then discarded.
         wh_warm = f"{base}/tenzir_spark_bench_wh_warm"
         shutil.rmtree(wh_warm, ignore_errors=True)
-        IngestRunner(spark, wh_warm, n_buckets=64, stats_mode=stats_mode,
-                     exact_watermarks=exact_wm).run(changes, max_batches=3)
+        IngestRunner(spark, wh_warm, n_buckets=64).run(changes, max_batches=3)
         shutil.rmtree(wh_warm, ignore_errors=True)
 
         def _cdc_run():
@@ -249,9 +235,7 @@ def main() -> None:
             measure ingest alone. Returns (runner, stats, summary)."""
             shutil.rmtree(wh, ignore_errors=True)
             r = IngestRunner(spark, wh, n_buckets=64,
-                             compact_min_rows=1 << 60,
-                             stats_mode=stats_mode,
-                             exact_watermarks=exact_wm)
+                             compact_min_rows=1 << 60)
             st = r.run(changes)
             steady = st["batch_stats"][1:]
             summ = {"mean": None, "median": None, "stalled": False,
@@ -322,9 +306,7 @@ def main() -> None:
                              n_batches=4, seed=42, token_len=(64, 256))
         shutil.rmtree(wh, ignore_errors=True)
         runner_lg = IngestRunner(spark, wh, n_buckets=64,
-                                 compact_min_rows=1 << 60,
-                                 stats_mode=stats_mode,
-                                 exact_watermarks=exact_wm)
+                                 compact_min_rows=1 << 60)
         stats_lg = runner_lg.run(changes_lg)
         steady_lg = stats_lg["batch_stats"][1:]
         if steady_lg:

@@ -32,7 +32,6 @@ def main() -> None:
     p.add_argument("--parts", type=int, default=8)
     p.add_argument("--batches", type=int, default=10)
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--salt", type=int, default=16)
     p.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     p.add_argument("--changes", default="/tmp/tenzir_spark_changes")
     p.add_argument("--warehouse", default="/tmp/tenzir_spark_wh")
@@ -44,25 +43,6 @@ def main() -> None:
                    help="local-mode heap. Measured: oversizing (48g) is 3x "
                         "SLOWER than 8-12g here (G1 region sizing + cold "
                         "pages); don't throw memory at local mode")
-    p.add_argument("--stats-mode", default="full", choices=["winners", "full"],
-                   help="'full' (default): a column-pruned stats job per "
-                        "batch overlapped with the write in a side thread; "
-                        "exact for any event->partition assignment. "
-                        "'winners': ONE Spark job per batch — watermarks/"
-                        "lineage ride the delta files' side-channel "
-                        "columns; exact under keyed routing, and measured "
-                        "faster when the payload dominates the row (heavy "
-                        "token arrays) — the side-channel bytes and the "
-                        "driver's footer read are then noise. On small-"
-                        "payload/many-key batches full wins (A/B numbers "
-                        "in BASELINE.md).")
-    p.add_argument("--exact-watermarks", action="store_true",
-                   help="with --stats-mode winners: derive per-partition "
-                        "watermarks from observed metrics riding the one "
-                        "collapse+write job (CollectMetrics) — exact for "
-                        "ANY event->partition routing, no keyed-topic "
-                        "assumption, at a measured 20-35%% steady cost "
-                        "(the barrier splits the scan's codegen span)")
     p.add_argument("--master", default=None,
                    help="Spark master URL (e.g. spark://host:7077) for a "
                         "real multi-executor cluster; default local[cores]. "
@@ -126,9 +106,8 @@ def main() -> None:
                       driver_memory=args.driver_mem, extra_conf=extra,
                       master=args.master)
     runner = IngestRunner(
-        spark, args.warehouse, n_buckets=args.buckets, salt_buckets=args.salt,
-        async_compact=args.async_compact, stats_mode=args.stats_mode,
-        exact_watermarks=args.exact_watermarks,
+        spark, args.warehouse, n_buckets=args.buckets,
+        async_compact=args.async_compact,
         retain_snapshots=args.retain_snapshots,
         sorted_compaction=args.sorted_compaction,
         dlq=args.dlq,

@@ -51,8 +51,7 @@ def main() -> None:
     spark = get_spark("endurance", cores=args.cores, driver_memory="12g",
                       extra_conf={"spark.local.dir": "/dev/shm/endurance_local"})
 
-    runner = IngestRunner(spark, args.warehouse, n_buckets=128, async_compact=True,
-                          stats_mode=os.environ.get("ENDURANCE_STATS", "full"))
+    runner = IngestRunner(spark, args.warehouse, n_buckets=128, async_compact=True)
     t0 = time.monotonic()
     stats = runner.run(args.changes)
     wall = time.monotonic() - t0

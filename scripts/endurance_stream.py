@@ -97,8 +97,7 @@ def main() -> None:
         n_batches=args.batches, seed=42, token_len=(64, 256),
         schema_change_batch=args.schema_change_batch, compression="lz4")
     gen.write_manifest(chg)
-    runner = IngestRunner(spark, wh, n_buckets=64, stats_mode="winners",
-                          async_compact=True,
+    runner = IngestRunner(spark, wh, n_buckets=64, async_compact=True,
                           retain_snapshots=args.retain_snapshots)
     runner.ensure_table()
 

@@ -73,8 +73,7 @@ def run_ingest(n_workers: int, changes: str) -> dict:
         },
     )
     runner = IngestRunner(spark, wh, n_buckets=64,
-                          async_compact=os.environ.get("SA_ASYNC", "") == "1",
-                          stats_mode=os.environ.get("SA_STATS", "full"))
+                          async_compact=os.environ.get("SA_ASYNC", "") == "1")
     stats = runner.run(changes)
     final_rows = runner.final_state().count()
     spark.stop()

@@ -14,7 +14,8 @@ demand (reference: web/docs/operators/deduplicate.md:20-40):
   contract;
 - a scripted mid-stream `schema_change` that introduces the `meta` column;
 - hot-key skew: a handful of doc_ids absorb a configurable fraction of all
-  events (exercises salted collapse + AQE skew handling).
+  events (exercises the collapse's map-side partial aggregation and AQE
+  skew handling).
 
 No Spark here: generation is a single-threaded vectorized writer, so the
 benchmarked engine time excludes data synthesis.

@@ -15,17 +15,12 @@ every group), but an algebraic aggregate ``max_by(struct(*), lsn)``:
 - Duplicate LSN deliveries are bit-identical redeliveries, so max_by's
   tie-break is immaterial: dedup falls out for free.
 
-For pathological skew (one key = most of a batch) an optional two-phase
-salted variant spreads even the *partial* rows over ``salt`` reducers
-before the final single-row reduce.  Both phases stay algebraic.
-
-Measured guidance (local[32], 100k-event batches): the single-phase
-algebraic form is ~4× faster — map-side partial aggregation already
-collapses hot keys to one row per map task, so the post-shuffle per-key
-row count is bounded by #map-tasks, not #events. Salting only pays when a
-single key's PARTIAL rows overwhelm one reducer, i.e. #map-tasks ≫
-#reducer-capacity — at 1000-executor scale with 10^5 map tasks, enable it
-(salt_buckets ≈ 2×cores) for measured hot keys; default off.
+A two-phase salted variant (partial rows spread over ``salt`` reducers
+before the final reduce) was measured and deleted: ~4× slower at
+local[32] with 100k-event batches, and 5-11% slower ``batch_commit_ms``
+in three paired cdcbench ``narrow_rows`` runs at local[4] (half of the
+events on four hot keys). Map-side partial aggregation already bounds a
+hot key's post-shuffle rows by the number of map tasks, not of events.
 """
 
 from __future__ import annotations
@@ -34,34 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def collapse_lww(
-    batch: DataFrame,
-    key: str = "doc_id",
-    order: str = "lsn",
-    salt_buckets: int = 0,
-    count_col: str | None = None,
-) -> DataFrame:
-    """One row per ``key``: the full row holding the max ``order`` value.
-
-    ``count_col`` additionally emits how many input events collapsed into
-    each winner — an algebraic count that rides the SAME partial
-    aggregation (zero extra pass); the runner's one-job stats mode derives
-    dedup metrics from it instead of a second scan of the batch."""
-    cols = batch.columns
-    winner = F.max_by(F.struct(*cols), F.col(order))
-    if salt_buckets and salt_buckets > 1:
-        salt = F.pmod(F.xxhash64(F.col(order)), F.lit(salt_buckets))
-        aggs = [winner.alias("_w")]
-        if count_col:
-            aggs.append(F.count("*").alias(count_col))
-        phase1 = batch.groupBy(F.col(key).alias("_k"), salt.alias("_salt")).agg(*aggs)
-        aggs2 = [F.max_by(F.col("_w"), F.col(f"_w.{order}")).alias("_w")]
-        if count_col:
-            aggs2.append(F.sum(count_col).alias(count_col))
-        out = phase1.groupBy("_k").agg(*aggs2)
-        return out.select("_w.*", count_col) if count_col else out.select("_w.*")
-    aggs = [winner.alias("_w")]
-    if count_col:
-        aggs.append(F.count("*").alias(count_col))
-    out = batch.groupBy(F.col(key).alias("_k")).agg(*aggs)
-    return out.select("_w.*", count_col) if count_col else out.select("_w.*")
+def collapse_lww(batch: DataFrame, key: str = "doc_id", order: str = "lsn") -> DataFrame:
+    """One row per ``key``: the full row holding the max ``order`` value."""
+    winner = F.max_by(F.struct(*batch.columns), F.col(order))
+    return batch.groupBy(F.col(key).alias("_k")).agg(winner.alias("_w")).select("_w.*")

@@ -28,6 +28,7 @@ from __future__ import annotations
 import os
 import time
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,8 +38,6 @@ from tenzir_spark.lake.table import (
     BUCKET_COL,
     COMMIT_COL,
     DELETED_COL,
-    LSN_COL,
-    NEV_COL,
     PART_COL,
     LakeTable,
 )
@@ -71,25 +70,10 @@ BASE_PAYLOAD_SCHEMA = T.StructType(
     ]
 )
 
-# Above this many known source partitions, winners mode stops attaching
-# the per-partition observed-metrics watermark (EXACT_WM; one conditional
-# max expression per partition — the expression list itself would dominate
-# at 10^4 partitions) and pays one slim column-pruned agg job per batch
-# instead (still exact for any routing; never the keyed assumption).
-EXACT_WM_MAX_PARTS = 256
-
-# Per-mode metric semantics (stats_mode):
-# - "full":    events_in = DELIVERED events incl. stale redeliveries;
-#              events_deduped = delivered - distinct fresh LSNs (redelivery
-#              + duplicate-LSN noise).
-# - "winners": metrics come from the delta-file side channel. When the
-#              caller supplies per-partition delivered counts (apply_batch
-#              recovers them from the input parquet footers), events_in =
-#              delivered and events_deduped = delivered - applied
-#              (redelivery + LWW-collapse dupes). Without them (an
-#              in-memory streaming batch), events_in degrades to FRESH
-#              events only and events_deduped to fresh - applied (collapse
-#              dupes only) — documented fallback, not an error.
+# Metric semantics, per (batch, source partition): events_in = delivered
+# events, stale redeliveries included; events_applied = winners written to
+# the batch's delta files; events_deduped = events_in - events_applied
+# (redeliveries, duplicate LSNs and LWW-collapsed events).
 METRICS_SCHEMA = T.StructType(
     [
         T.StructField("batch_id", T.LongType(), False),
@@ -140,6 +124,34 @@ def widen_type(table_t: T.DataType, batch_t: T.DataType) -> T.DataType:
     )
 
 
+def _footer_part_stats(mds) -> dict[int, tuple[int, int]] | None:
+    """``{part_id: (delivered rows, max lsn)}`` from parquet footers
+    (``pyarrow.parquet.FileMetaData``): each row group's ``part_id``
+    min == max statistics attribute its rows, and its ``lsn`` max statistic
+    bounds them — metadata only, no pass over the data (the reference's
+    catalog builds partition synopses the same way, catalog.cpp:119-171).
+    None when some row group cannot be attributed (it mixes partitions,
+    holds nulls, or has no statistics)."""
+    out: dict[int, tuple[int, int]] = {}
+    for md in mds:
+        names = md.schema.names
+        if "part_id" not in names or "lsn" not in names:
+            return None
+        pi, li = names.index("part_id"), names.index("lsn")
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            if g.num_rows == 0:
+                continue
+            ps, ls = g.column(pi).statistics, g.column(li).statistics
+            if (ps is None or ls is None or not ps.has_min_max
+                    or not ls.has_min_max or ps.min != ps.max
+                    or ps.null_count or ls.null_count):
+                return None
+            n, mx = out.get(int(ps.min), (0, -1))
+            out[int(ps.min)] = (n + g.num_rows, max(mx, int(ls.max)))
+    return out
+
+
 class IngestRunner:
     def __init__(
         self,
@@ -147,15 +159,12 @@ class IngestRunner:
         warehouse: str,
         table_name: str = "corpus",
         n_buckets: int = 32,
-        salt_buckets: int = 0,
         key: str = "doc_id",
         compact_min_rows: int = 2_000_000,
         compact_ratio: float = 0.5,
         compact_max_commits: int = 64,
         async_compact: bool = False,
-        stats_mode: str = "full",
         delta_codec: str = "zstd",
-        exact_watermarks: bool = False,
         retain_snapshots: int | None = None,
         sorted_compaction: bool = False,
         dlq: bool = False,
@@ -172,7 +181,6 @@ class IngestRunner:
         self.fs = self.table.fs
         self.metrics_dir = os.path.join(warehouse, "ingest_metrics")
         self.n_buckets = n_buckets
-        self.salt_buckets = salt_buckets
         self.key = key
         # merge-on-read compaction policy: fold deltas into the base once
         # they exceed max(compact_min_rows, compact_ratio × base rows) or
@@ -212,32 +220,6 @@ class IngestRunner:
         # one warehouse in a long-lived process (tests, notebooks) don't
         # need explicit releases; the one-shot CLI turns it ON.
         self.writer_lease = writer_lease
-        # "full": a column-pruned stats job over the raw batch runs in a
-        # side thread (events_in counts stale deliveries too; watermarks
-        # are exact for ANY event→partition assignment).
-        # "winners": ONE Spark job per batch — the collapse carries each
-        # winner's lsn and collapsed-event count into the delta files, and
-        # watermarks/lineage/dedup metrics come from a driver-side pyarrow
-        # read of those three int columns. Watermarks derive from winner
-        # lsns, exact only under keyed routing (all events of a key in
-        # one source partition — the kafka/keyed-topic contract the
-        # changegen implements): the max-lsn event of partition P then
-        # wins its own key, so max(winner lsn|part=P) == max(lsn|part=P).
-        # If keys straddle partitions that equality can fail low and a
-        # replay could re-apply a stale straddling event. For such
-        # sources either use "full" (the overlapped side scan is exact
-        # for any routing; ~15% on a loaded box) or set
-        # exact_watermarks=True: a per-known-partition max(lsn) then
-        # rides the SAME job as observed metrics (CollectMetrics —
-        # map-side accumulator, no extra job; unknown partitions fall
-        # back to one slim agg for that batch). One-job semantics for any
-        # routing, but the CollectMetrics barrier splits the scan's
-        # whole-stage-codegen span and re-materializes the wide token
-        # rows — measured 20-35% steady-throughput cost on the sf0.1
-        # bench, which is why it is OFF by default and "full" is the
-        # recommended non-keyed mode.
-        self.stats_mode = stats_mode
-        self.exact_watermarks = exact_watermarks
 
     # ------------------------------------------------------------- helpers
     def ensure_table(self, payload_schema: T.StructType = BASE_PAYLOAD_SCHEMA) -> None:
@@ -246,24 +228,6 @@ class IngestRunner:
         if not self.table.exists():
             self.table.create(payload_schema, n_buckets=self.n_buckets, key=self.key,
                               properties={"watermarks": {}, "last_batch_id": -1})
-
-    def _lineage_from_commit(self, cid: int) -> dict[int, int]:
-        """Per-source-partition applied counts, read from the delta files'
-        ``_part`` lineage column via pyarrow (driver-local, no Spark job).
-        Matches on the data-commit id delta_commit reports — NOT the
-        snapshot version: the two counters diverge permanently after any
-        aborted commit (noop-abort redelivery, empty compaction)."""
-        import numpy as np
-
-        counts: dict[int, int] = {}
-        for e in self.table.snapshot()["files"]:
-            if e.get("kind") == "delta" and e["commit"] == cid:
-                col = self.fs.parquet_read(
-                    os.path.join(self.table.root, e["path"]), columns=[PART_COL]
-                )[PART_COL].to_numpy(zero_copy_only=False)
-                for p, c in zip(*np.unique(col[col != None], return_counts=True)):  # noqa: E711
-                    counts[int(p)] = counts.get(int(p), 0) + int(c)
-        return counts
 
     def _maybe_compact(self) -> None:
         p = self.table.delta_pressure()
@@ -301,9 +265,9 @@ class IngestRunner:
         quarantine the original attempt wrote; dead letters survive until
         the operator deletes them.
 
-        Rejected events can be REDELIVERED fresh (winners-mode watermarks
-        track winner LSNs only, and a crash before the snapshot commit
-        replays the batch in any mode), so new rows dedupe against the
+        Rejected events can be REDELIVERED fresh (a crash after the
+        quarantine but before the snapshot commit replays the batch with
+        the old watermarks), so new rows dedupe against the
         batch's existing quarantine by (part_id, lsn) — each dead letter
         is kept exactly once no matter how many delivery attempts carry
         it."""
@@ -379,11 +343,11 @@ class IngestRunner:
 
     # ------------------------------------------------------------ the loop
     def apply_batch(self, path: str, batch_id: int) -> dict:
-        # derive the batch schema from one parquet footer driver-side —
-        # saves the per-batch schema-inference listing job (the files of
-        # one batch are written together and share a schema; evolution
-        # shows up in the footer just the same). Footers are read through
-        # ``fs``, each at most once.
+        # every input footer is read once, driver-side, through ``fs``: the
+        # first gives the batch schema (no schema-inference listing job —
+        # the files of one batch are written together and share a schema;
+        # evolution shows up in the footer just the same), and all of them
+        # give the per-partition delivered counts and max LSNs
         from pyspark.sql.pandas.types import from_arrow_schema
 
         files = (
@@ -391,53 +355,42 @@ class IngestRunner:
             else [os.path.join(path, fn) for fn in sorted(self.fs.listdir(path))
                   if fn.endswith(".parquet")]
         )
-        winners = self.stats_mode == "winners"
-        mds = [self.fs.parquet_metadata(f)
-               for f in (files if winners else files[:1])]
+        mds = [self.fs.parquet_metadata(f) for f in files]
         reader = self.spark.read
         if mds:
             reader = reader.schema(from_arrow_schema(mds[0].schema.to_arrow_schema()))
-        delivered = None
-        if winners:
-            # winners mode only sees fresh/winner events; recover the exact
-            # per-partition DELIVERED counts (incl. stale redeliveries)
-            # from the input parquet footers — driver-side metadata, no
-            # job. Attribution needs per-row-group part_id min==max (true
-            # for per-partition files, the keyed-routing layout); a mixed
-            # row group voids the recovery and metrics degrade to the
-            # documented fresh-only fallback.
-            delivered = {}
-            for md in mds:
-                pi = md.schema.names.index("part_id") if "part_id" in md.schema.names else None
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    st_ = g.column(pi).statistics if pi is not None else None
-                    if st_ is None or not st_.has_min_max or int(st_.min) != int(st_.max):
-                        delivered = None
-                        break
-                    p = int(st_.min)
-                    delivered[p] = delivered.get(p, 0) + g.num_rows
-                if delivered is None:
-                    break
-        st = self.apply_batch_df(reader.parquet(path), batch_id,
-                                 delivered_by_part=delivered)
-        if winners and mds:
-            st["events_in"] = sum(md.num_rows for md in mds)
-        return st
+        return self.apply_batch_df(reader.parquet(path), batch_id,
+                                   part_stats=_footer_part_stats(mds))
 
     def apply_batch_df(self, raw: DataFrame, batch_id: int,
-                       delivered_by_part: dict[int, int] | None = None) -> dict:
+                       part_stats: dict[int, tuple[int, int]] | None = None) -> dict:
         """Micro-batch body — also the ``foreachBatch`` target of the
         Structured Streaming front-end (streaming/ingest.py). All durable
         state lives in the table snapshot, so the SAME idempotence guard
         covers batch replay, streaming-checkpoint replay, and redelivery.
 
-        ``delivered_by_part``: optional per-source-partition delivered
-        counts (incl. stale redeliveries), used only by winners stats mode
-        to report full-mode-comparable events_in (see METRICS_SCHEMA)."""
+        ``part_stats``: ``{part_id: (delivered rows, max lsn)}`` of ``raw``
+        when the caller has it without a pass over the data (apply_batch
+        reads it from the input footers). Without it, one slim
+        ``(part_id, lsn)`` aggregate over ``raw`` computes it."""
         t0 = time.monotonic()
-        wm = self.watermarks()
-        use_winners = self.stats_mode == "winners"
+        # one manifest read pins the watermarks, the schema and the bucket
+        # count of this batch
+        snap = self.table.snapshot()
+        wm = dict(snap["properties"].get("watermarks", {}))
+        if part_stats is None:
+            part_stats = {
+                int(r["part_id"]): (int(r["n"]), -1 if r["mx"] is None else int(r["mx"]))
+                for r in raw.groupBy("part_id")
+                .agg(F.count("*").alias("n"), F.max("lsn").alias("mx")).collect()
+            }
+        # exact for any event→partition routing: stale events sit at or
+        # below the old watermark, so max(old, max delivered lsn) equals
+        # max(old, max fresh lsn)
+        new_wm = dict(wm)
+        for p, (_, mx) in part_stats.items():
+            if mx > int(wm.get(str(p), -1)):
+                new_wm[str(p)] = mx
 
         # -- idempotence: only events strictly above the committed
         # watermark. The watermark table rides a BROADCAST join, not a
@@ -459,82 +412,12 @@ class IngestRunner:
         raw = raw.join(F.broadcast(wm_df), on="part_id", how="left")
         is_fresh = F.col("lsn") > F.coalesce(F.col("_wm"), F.lit(-1))
 
-        # -- exact winners-mode watermarks: per-known-partition max(lsn)
-        # as OBSERVED metrics on the raw batch. CollectMetrics evaluates
-        # map-side inside the one collapse+write job (no extra pass, no
-        # shuffle), and unlike the winner-derived max it is exact for ANY
-        # event→partition routing, keyed or not. The expression list uses
-        # the same stable partition-id literals every batch, so the plan
-        # (and its codegen unit) stays cached. Partitions absent from the
-        # watermark map are detected by a catch-all count; their (rare —
-        # first batch, partition-count change) watermarks come from one
-        # slim column-pruned fallback agg in _props.
-        wm_obs = None
-        obs_parts: list[int] = []
-        raw_pre_obs = raw  # observe-free plan for the rare fallback agg
-        if (use_winners and self.exact_watermarks
-                and len(wm) <= EXACT_WM_MAX_PARTS):
-            from pyspark.sql import Observation
-
-            obs_parts = sorted(int(k) for k in wm.keys())
-            unknown = (~F.col("part_id").isin(obs_parts)
-                       if obs_parts else F.lit(True))
-            wm_obs = Observation()
-            raw = raw.observe(
-                wm_obs,
-                F.count(F.when(unknown, F.lit(1))).alias("_unk"),
-                *[
-                    F.max(F.when(F.col("part_id") == p, F.col("lsn")))
-                    .alias(f"_w{p}")
-                    for p in obs_parts
-                ],
-            )
-
-        stats_box: dict = {}
-        if not use_winners:
-            # -- "full" mode: lineage counts + watermarks from a slim
-            # column-pruned pass over the raw batch, run in a SIDE THREAD
-            # so it overlaps the heavy collapse+write job (its result is
-            # only needed at the manifest swap)
-            import threading
-
-            def _stats_job():
-                try:
-                    stats_box["pre"] = (
-                        raw.groupBy("part_id")
-                        .agg(
-                            F.count("*").alias("events_in"),
-                            F.count(F.when(is_fresh, 1)).alias("fresh"),
-                            F.count_distinct(F.when(is_fresh, F.col("lsn"))).alias("fresh_unique"),
-                            F.max(F.when(is_fresh, F.col("lsn"))).alias("wmax"),
-                        )
-                        .collect()
-                    )
-                except Exception as e:  # noqa: BLE001 - re-raised at join
-                    stats_box["error"] = e
-
-            stats_thread = threading.Thread(target=_stats_job, daemon=True)
-            stats_thread.start()
-
-            def _stats():
-                stats_thread.join()
-                if "error" in stats_box:
-                    raise stats_box["error"]
-                if "new_wm" not in stats_box:
-                    new_wm = dict(wm)
-                    for r in stats_box["pre"]:
-                        if r["wmax"] is not None:
-                            k = str(int(r["part_id"]))
-                            new_wm[k] = max(int(new_wm.get(k, -1)), int(r["wmax"]))
-                    stats_box["new_wm"] = new_wm
-                return stats_box
-
         # -- schema reconciliation: added columns append; a column whose
         # batch dtype differs WIDENS the table schema along the numeric
         # lattice (widen_type; raises on a non-widening change). The
         # parquet reader serves old narrow files under the widened schema
         # natively, so no rewrite — cast-on-read, the reference's model.
-        table_schema = self.table.schema()
+        table_schema = T.StructType.fromJson(snap["schema"])
         batch_payload = [
             f for f in raw.schema.fields
             if f.name not in CONTROL_COLS and f.name != "_wm"
@@ -586,20 +469,12 @@ class IngestRunner:
                 batch_id,
             )
         data = raw.filter(is_fresh & applicable).drop("_wm")
-        collapsed = collapse_lww(data, key=self.key, order="lsn",
-                                 salt_buckets=self.salt_buckets,
-                                 count_col=NEV_COL if use_winners else None)
+        collapsed = collapse_lww(data, key=self.key, order="lsn")
         # merge-on-read delta: payload aligned to the (possibly evolved)
         # schema + bucket + tombstone flag + source-partition lineage.
         # ONE Spark job (collapse→write); rows/buckets/lineage come from
-        # the written parquet footers — no cache of wide token arrays
+        # the written parquet files — no cache of wide token arrays
         # (caching them thrashes GC under high task concurrency).
-        extra = [
-            (F.col("op") == "delete").alias(DELETED_COL),
-            F.col("part_id").alias(PART_COL),
-        ]
-        if use_winners:
-            extra += [F.col("lsn").alias(LSN_COL), F.col(NEV_COL)]
         delta = collapsed.select(
             *[
                 F.col(f.name).cast(f.dataType).alias(f.name)
@@ -607,119 +482,45 @@ class IngestRunner:
                 else F.lit(None).cast(f.dataType).alias(f.name)
                 for f in evolved.fields
             ],
-            *extra,
-        ).withColumn(BUCKET_COL, self.table.bucket_expr(self.key))
+            (F.col("op") == "delete").alias(DELETED_COL),
+            F.col("part_id").alias(PART_COL),
+        ).withColumn(BUCKET_COL, self.table.bucket_expr(
+            self.key, n_buckets=int(snap["n_buckets"])))
 
-        if use_winners:
-            def _props(entries):
-                st = self._winner_stats(entries)
-                stats_box.update(st)
-                new_wm = dict(wm)
-                if wm_obs is not None:
-                    # the delta write (an action over the observed plan)
-                    # has completed by manifest-swap time, so .get is
-                    # immediate — exact per-partition delivered maxes
-                    m = wm_obs.get
-                    for p in obs_parts:
-                        v = m[f"_w{p}"]
-                        if v is not None:
-                            k = str(p)
-                            new_wm[k] = max(int(new_wm.get(k, -1)), int(v))
-                    if m["_unk"]:
-                        # partitions not yet in the watermark map: one
-                        # slim (part_id, lsn)-pruned agg over just their
-                        # rows — pays a job only on partition-appearance
-                        # batches (incl. the very first batch)
-                        unk_rows = (
-                            raw_pre_obs.filter(~F.col("part_id").isin(obs_parts))
-                            if obs_parts else raw_pre_obs
-                        )
-                        for r in (unk_rows.groupBy("part_id")
-                                  .agg(F.max("lsn").alias("_mx")).collect()):
-                            k = str(int(r["part_id"]))
-                            new_wm[k] = max(int(new_wm.get(k, -1)), int(r["_mx"]))
-                elif self.exact_watermarks:
-                    # > EXACT_WM_MAX_PARTS known partitions: the observed
-                    # expression list would dominate, so pay ONE slim
-                    # (part_id, lsn)-pruned agg per batch instead —
-                    # exactness never silently degrades to the
-                    # keyed-routing assumption
-                    for r in (raw_pre_obs.groupBy("part_id")
-                              .agg(F.max("lsn").alias("_mx")).collect()):
-                        k = str(int(r["part_id"]))
-                        new_wm[k] = max(int(new_wm.get(k, -1)), int(r["_mx"]))
-                else:
-                    # keyed-routing contract: winner lsns stand in for the
-                    # per-partition delivered maxes (see __init__ note)
-                    for p, mx in st["wmax"].items():
-                        k = str(p)
-                        new_wm[k] = max(int(new_wm.get(k, -1)), int(mx))
-                stats_box["new_wm"] = new_wm
-                if new_wm == wm:
-                    return {}  # pure redelivery: no progress to record
-                return {"watermarks": new_wm, "last_batch_id": batch_id}
-        else:
-            def _props(entries):
-                s = _stats()
-                if s["new_wm"] == wm:
-                    return {}  # pure redelivery: no progress to record
-                return {"watermarks": s["new_wm"], "last_batch_id": batch_id}
+        applied: dict[int, int] = {}
+
+        def _props(entries):
+            # per-partition applied counts from the new delta files'
+            # ``_part`` lineage, read before the manifest swap: a fold the
+            # commit triggers removes these entries from HEAD
+            for e in entries:
+                parts = self.fs.parquet_read(
+                    os.path.join(self.table.root, e["path"]), columns=[PART_COL]
+                )[PART_COL].drop_null().to_numpy()
+                for p, c in zip(*np.unique(parts, return_counts=True)):
+                    applied[int(p)] = applied.get(int(p), 0) + int(c)
+            if new_wm == wm:
+                return {}  # pure redelivery: no progress to record
+            return {"watermarks": new_wm, "last_batch_id": batch_id}
 
         # pure redelivery nets out to a no-op: empty delta + unchanged
         # watermarks/schema → delta_commit aborts without a snapshot
         version, dstats = self.table.delta_commit(
             delta, schema=evolved, properties=_props, allow_noop_abort=True,
         )
-        n_keys = dstats["rows"]
         if version is not None:
             self._maybe_compact()
         wall_ms = int((time.monotonic() - t0) * 1000)
 
-        if use_winners:
-            new_wm = stats_box.get("new_wm", dict(wm))
-            applied = stats_box.get("applied", {})
-            fresh = stats_box.get("fresh", {})
-            # events_in per partition: exact delivered count when the
-            # caller recovered it from footers, else the documented
-            # fresh-only fallback (METRICS_SCHEMA semantics note)
-            ev_in = delivered_by_part if delivered_by_part is not None else fresh
-            metrics = [
-                (
-                    batch_id, int(p), int(ev_in.get(p, fresh.get(p, 0))),
-                    int(applied.get(p, 0)),
-                    int(ev_in.get(p, fresh.get(p, 0))) - int(applied.get(p, 0)),
-                    int(new_wm.get(str(int(p)), -1)), wall_ms,
-                )
-                for p in sorted(set(fresh) | set(ev_in))
-            ]
-            events_in = sum(ev_in.values())
-            fresh_total = sum(fresh.values())
-        else:
-            applied_by_part = (
-                self._lineage_from_commit(dstats["cid"]) if version is not None else {}
-            )
-            s = _stats()
-            pre, new_wm = s["pre"], s["new_wm"]
-            fresh_total = sum(r["fresh"] for r in pre)
-            events_in = sum(r["events_in"] for r in pre)
-            metrics = [
-                (
-                    batch_id,
-                    int(r["part_id"]),
-                    int(r["events_in"]),
-                    applied_by_part.get(int(r["part_id"]), 0),
-                    int(r["events_in"]) - int(r["fresh_unique"]),
-                    int(new_wm.get(str(int(r["part_id"])), -1)),
-                    wall_ms,
-                )
-                for r in pre
-            ]
-        self._write_metrics(metrics, batch_id)
+        self._write_metrics([
+            (batch_id, p, n, applied.get(p, 0), n - applied.get(p, 0),
+             int(new_wm.get(str(p), -1)), wall_ms)
+            for p, (n, _) in sorted(part_stats.items())
+        ], batch_id)
         return {
             "batch_id": batch_id,
-            "events_in": events_in,
-            "fresh": fresh_total,
-            "applied_keys": n_keys,
+            "events_in": sum(n for n, _ in part_stats.values()),
+            "applied_keys": dstats["rows"],
             "wall_ms": wall_ms,
             "version": self.table.current_version(),
             # dlq_rejected = NEWLY quarantined (0 on a redelivery whose
@@ -728,42 +529,6 @@ class IngestRunner:
             "dlq_rejected": self._last_dlq_count if self.dlq else 0,
             "dlq_in_batch": self._last_dlq_in_batch if self.dlq else 0,
         }
-
-    def _winner_stats(self, entries: list[dict]) -> dict:
-        """One-job stats: per-source-partition applied counts, collapsed
-        fresh-event counts, and max winner LSN, read driver-side from the
-        freshly written delta files' three int side-channel columns
-        (``_part``/``_lsn``/``_n_ev``) — microseconds of pyarrow against a
-        second Spark job over the batch."""
-        import numpy as np
-
-        applied: dict[int, int] = {}
-        fresh: dict[int, int] = {}
-        wmax: dict[int, int] = {}
-        for e in entries:
-            tbl = self.fs.parquet_read(
-                os.path.join(self.table.root, e["path"]),
-                columns=[PART_COL, LSN_COL, NEV_COL],
-            )
-            parts = tbl[PART_COL].to_numpy(zero_copy_only=False).astype(np.int64)
-            lsns = tbl[LSN_COL].to_numpy(zero_copy_only=False).astype(np.int64)
-            nevs = tbl[NEV_COL].to_numpy(zero_copy_only=False).astype(np.int64)
-            if not len(parts):
-                continue
-            # single-pass grouped reductions (bincount / scatter-max):
-            # with millions of winner rows a per-partition mask loop costs
-            # ~1 s of driver time per batch — this is ~10 ms
-            n = int(parts.max()) + 1
-            cnt = np.bincount(parts, minlength=n)
-            nev_sum = np.bincount(parts, weights=nevs, minlength=n).astype(np.int64)
-            mx = np.full(n, -1, dtype=np.int64)
-            np.maximum.at(mx, parts, lsns)
-            for p in np.nonzero(cnt)[0]:
-                pi = int(p)
-                applied[pi] = applied.get(pi, 0) + int(cnt[p])
-                fresh[pi] = fresh.get(pi, 0) + int(nev_sum[p])
-                wmax[pi] = max(wmax.get(pi, -1), int(mx[p]))
-        return {"applied": applied, "fresh": fresh, "wmax": wmax}
 
     def _write_metrics(self, rows: list[tuple], batch_id: int) -> None:
         """Metrics are tiny driver-local lineage rows — writing them through

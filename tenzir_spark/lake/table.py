@@ -52,8 +52,6 @@ BUCKET_COL = "_bucket"
 COMMIT_COL = "_commit"
 DELETED_COL = "_deleted"
 PART_COL = "_part"  # source-partition lineage carried in delta files
-LSN_COL = "_lsn"    # winner LSN carried in delta files (one-job stats mode:
-NEV_COL = "_n_ev"   # watermarks + dedup counts come from delta footers)
 
 
 # typed InternalRow setter per key type, so the JVM holds the value boxed
@@ -283,7 +281,7 @@ class LakeTable:
             "ts": time.time(),  # wall-clock commit time: age-based
             #                     retention + operator-facing history
             "schema": schema.jsonValue(),
-            "n_buckets": n_buckets or self.n_buckets(),
+            "n_buckets": n_buckets or int(prev["n_buckets"]),
             "key": prev.get("key", "doc_id"),
             "files": files,
             "properties": properties,
@@ -347,10 +345,13 @@ class LakeTable:
                 "process or after it exits")
 
     # ---------------------------------------------------------------- expr
-    def bucket_expr(self, key_col: str) -> F.Column:
+    def bucket_expr(self, key_col: str, n_buckets: int | None = None) -> F.Column:
         """Deterministic hash bucket of the primary key (Iceberg bucket
-        transform analog). xxhash64 is JVM-side and codegen'd."""
-        return F.pmod(F.xxhash64(F.col(key_col)), F.lit(self.n_buckets())).cast("int")
+        transform analog). xxhash64 is JVM-side and codegen'd.
+        ``n_buckets`` defaults to HEAD's; a caller that already holds a
+        snapshot passes its count and saves the manifest read."""
+        n = self.n_buckets() if n_buckets is None else n_buckets
+        return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n)).cast("int")
 
     def _read_schema(
         self, payload_schema: T.StructType, with_deleted: bool = False
@@ -644,21 +645,18 @@ class LakeTable:
         churn of wide array columns is what kills local-mode GC).
         Returns (version, {"rows": n, "buckets": [...]}).
 
-        ``properties`` may be a CALLABLE evaluated only at the manifest
-        swap — lets the caller overlap a side computation (e.g. the
-        watermark stats job) with the heavy write. With
-        ``allow_noop_abort``, a commit that would change nothing (zero
-        rows, identical schema and properties) is aborted: files removed,
-        no snapshot — this is what keeps pure redelivery invisible.
+        ``properties`` may be a CALLABLE of the new manifest entries,
+        evaluated after the write and before the manifest swap, so the
+        caller can read the delta files before a fold takes them out of
+        HEAD. With ``allow_noop_abort``, a commit that would change nothing
+        (zero rows, identical schema and properties) is aborted: files
+        removed, no snapshot — this is what keeps pure redelivery
+        invisible.
 
-        Returns (version, {"rows": n, "buckets": [...], "cid": cid}).
-        ``cid`` is the data-commit id actually written into the manifest
-        entries — callers that need per-commit lineage must match on it,
-        NOT on the snapshot version (the two counters diverge as soon as
-        any commit aborts). Concurrent with compact(): safe for any
-        interleaving, because the fold preserves original per-row commit
-        ids (see write_commit_files) — this delta's rows resolve by true
-        LWW order regardless of when the fold publishes.
+        Concurrent with compact(): safe for any interleaving, because the
+        fold preserves original per-row commit ids (see
+        write_commit_files) — this delta's rows resolve by true LWW order
+        regardless of when the fold publishes.
         """
         cid = self._alloc_commit_id()
         commit_dir = os.path.join(self.data_dir, f"{COMMIT_COL}={cid}")
@@ -669,11 +667,6 @@ class LakeTable:
         ]
         if PART_COL in df.columns:
             sel.append(F.col(PART_COL).cast("int"))
-        # stats side-channel columns: physical in the delta parquet, never
-        # part of the table read schema (read_files projects them away)
-        for extra in (LSN_COL, NEV_COL):
-            if extra in df.columns:
-                sel.append(F.col(extra).cast("long"))
         out = df.select(*sel)
         # no repartition/coalesce: AQE partition coalescing already sizes the
         # reduce stage of the upstream collapse; a coalesce(1) here would
@@ -712,9 +705,6 @@ class LakeTable:
                     "rows": rows,
                 }
             )
-        # a callable gets the freshly-written manifest entries, so it can
-        # derive watermarks/lineage from the delta file footers instead of
-        # running a second Spark job over the batch
         new_props = properties(entries) if callable(properties) else properties
         if total == 0:
             # empty delta: drop the files; commit only if schema/props moved
@@ -730,9 +720,9 @@ class LakeTable:
                 and props == snap.get("properties", {})
                 and schema.jsonValue() == snap["schema"]
             ):
-                return None, {"rows": 0, "buckets": [], "cid": cid}
+                return None, {"rows": 0, "buckets": []}
             v = self.commit(snap["files"] + entries, schema, props)
-        return v, {"rows": total, "buckets": sorted(buckets), "cid": cid}
+        return v, {"rows": total, "buckets": sorted(buckets)}
 
     def delta_pressure(self) -> dict:
         """How much merge-on-read debt has accumulated (compaction policy

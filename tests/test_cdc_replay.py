@@ -108,14 +108,6 @@ def test_metrics_lineage(spark, changes_dir, tmp_path):
     assert (m.groupby("part_id")["watermark_lsn"].max() > 0).all()
 
 
-def test_salted_collapse_equivalent(spark, changes_dir, oracle, tmp_path):
-    # two-phase salted collapse (for pathological hot keys) must be
-    # semantically identical to the default single-phase algebraic form
-    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=8, salt_buckets=16)
-    r.run(changes_dir)
-    assert_state_equal(_engine_state(r), oracle)
-
-
 def test_compaction_preserves_state(spark, changes_dir, oracle, tmp_path):
     # force compaction after nearly every batch; final state must be
     # identical and delta debt must be folded into the base
@@ -199,7 +191,7 @@ def test_rebatching_invariance(spark, tmp_path):
 def test_extreme_hot_key_skew(spark, tmp_path):
     """60% of all events hitting ONE doc (pathological skew): algebraic
     partial aggregation must keep the collapse correct; result equals the
-    oracle; salted variant agrees."""
+    oracle."""
     d = str(tmp_path / "chg_skew")
     generate_changes(d, n_events=10_000, n_docs=500, n_parts=4, n_batches=4,
                      hot_doc_count=1, hot_frac=0.6)
@@ -207,9 +199,6 @@ def test_extreme_hot_key_skew(spark, tmp_path):
     r1 = IngestRunner(spark, str(tmp_path / "wh_plain"), n_buckets=8)
     r1.run(d)
     assert_state_equal(_engine_state(r1), oracle)
-    r2 = IngestRunner(spark, str(tmp_path / "wh_salt"), n_buckets=8, salt_buckets=16)
-    r2.run(d)
-    assert_state_equal(_engine_state(r2), oracle)
 
 
 def test_lineage_survives_cid_version_divergence(spark, changes_dir, tmp_path):
@@ -230,75 +219,71 @@ def test_lineage_survives_cid_version_divergence(spark, changes_dir, tmp_path):
     assert applied > 0, "lineage must survive cid/version divergence"
 
 
-def test_winners_stats_mode_matches_oracle(spark, changes_dir, oracle, tmp_path):
-    """One-job stats mode: watermarks/lineage from the delta files' side
-    channel columns, no second scan — final state must equal the oracle
-    through replay, redelivery, and resume."""
-    import glob
+def _jobs_consumed(spark, fn, tag):
+    """Spark job ids ``fn`` consumes, across all threads: the ids between
+    a probe job before it and one after it."""
+    sc = spark.sparkContext
 
-    wh = str(tmp_path / "wh")
-    r = IngestRunner(spark, wh, n_buckets=8, stats_mode="winners")
-    r.run(changes_dir)
-    assert_state_equal(_engine_state(r), oracle)
-    v = r.table.current_version()
-    # full redelivery: noop (exactly-once)
-    for i, p in enumerate(sorted(glob.glob(os.path.join(changes_dir, "batch-*")))):
-        r.apply_batch(p, 200 + i)
-    assert r.table.current_version() == v
-    assert_state_equal(_engine_state(r), oracle)
-    # resume over-replay from an earlier position
-    r2 = IngestRunner(spark, wh, n_buckets=8, stats_mode="winners")
-    r2.run(changes_dir, start_batch=2)
-    assert_state_equal(_engine_state(r2), oracle)
-    # watermarks identical to full mode's
-    rf = IngestRunner(spark, str(tmp_path / "wh_full"), n_buckets=8, stats_mode="full")
-    rf.run(changes_dir)
-    assert r.watermarks() == rf.watermarks()
+    def probe(t):
+        sc.setJobGroup(t, t)
+        spark.range(1).count()
+        return sc.statusTracker().getJobIdsForGroup(t)
+
+    before = max(probe(f"{tag}-before"))
+    fn()
+    return min(probe(f"{tag}-after")) - before - 1
 
 
 def test_winners_mode_single_action_per_batch(spark, changes_dir, tmp_path):
-    """The point of winners mode: ONE pass over the batch (the
-    collapse→write action; AQE materializes it as one job per query
-    stage) — full mode additionally runs the side-thread stats scan.
-    Measured via global job-id consumption, which covers all threads."""
+    """A batch of per-partition files runs only the jobs of its
+    idempotence join and collapse→write action (AQE materializes it as
+    one job per query stage): watermarks and delivered counts come from
+    the input footers. The same batch as one file whose row group mixes
+    partitions runs exactly one more action, the slim (part_id, lsn)
+    aggregate."""
     import glob
 
-    batches = sorted(glob.glob(os.path.join(changes_dir, "batch-*")))
-    sc = spark.sparkContext
-
-    def probe_job_id(tag):
-        sc.setJobGroup(tag, tag)
-        spark.range(1).count()
-        ids = sc.statusTracker().getJobIdsForGroup(tag)
-        return max(ids)
-
-    def jobs_consumed(runner, path, bid, tag):
-        runner.finish_compaction()
-        before = probe_job_id(f"{tag}-before")
-        runner.apply_batch(path, bid)
-        runner.finish_compaction()
-        after = probe_job_id(f"{tag}-after")
-        return after - before - 1
-
-    rw = IngestRunner(spark, str(tmp_path / "whw"), n_buckets=8, stats_mode="winners")
-    rw.ensure_table()
-    rf = IngestRunner(spark, str(tmp_path / "whf"), n_buckets=8, stats_mode="full")
-    rf.ensure_table()
-    # batch 1 (batch 0 pays one-time schema/listing jobs)
-    jobs_for = {}
-    for tag, r in (("w", rw), ("f", rf)):
-        r.apply_batch(batches[0], 0)
-        jobs_for[tag] = jobs_consumed(r, batches[1], 1, tag)
-    assert jobs_for["w"] < jobs_for["f"], (
-        f"winners mode must consume fewer jobs ({jobs_for})")
-
-
-def _mini_batch(spark, rows):
-    """(part_id, lsn, op, doc_id, n_tok) rows → a change-batch DataFrame
-    with the full control + base payload schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    schema = T.StructType([
+    from tenzir_spark.cdc.collapse import collapse_lww
+    from tenzir_spark.session import local_frame
+
+    batches = sorted(glob.glob(os.path.join(changes_dir, "batch-*")))
+    mixed = str(tmp_path / "mixed.parquet")
+    t = pa.concat_tables([pq.read_table(f) for f in
+                          sorted(glob.glob(os.path.join(batches[1], "*.parquet")))])
+    pq.write_table(t, mixed, row_group_size=t.num_rows)
+    # the actions alone, planned first so schema inference is not counted:
+    # the broadcast watermark join, collapse and write; the aggregate
+    wm = local_frame(spark, [(0, -1)], T.StructType([
+        T.StructField("part_id", T.IntegerType(), False),
+        T.StructField("_wm", T.LongType(), False)]))
+    collapsed = collapse_lww(spark.read.parquet(batches[1])
+                             .join(F.broadcast(wm), "part_id", "left"))
+    ref_write = _jobs_consumed(
+        spark, lambda: collapsed.write.parquet(str(tmp_path / "ref")), "ref-write")
+    agg = (spark.read.parquet(mixed).groupBy("part_id")
+           .agg(F.count("*"), F.max("lsn")))
+    ref_agg = _jobs_consumed(spark, agg.collect, "ref-agg")
+
+    jobs_for = {}
+    for tag, path in (("files", batches[1]), ("mixed", mixed)):
+        r = IngestRunner(spark, str(tmp_path / f"wh_{tag}"), n_buckets=8)
+        r.ensure_table()
+        # batch 0 pays the one-time schema/listing jobs
+        r.apply_batch(batches[0], 0)
+        jobs_for[tag] = _jobs_consumed(spark, lambda: r.apply_batch(path, 1), tag)
+    assert jobs_for["files"] <= ref_write, (jobs_for, ref_write)
+    assert jobs_for["mixed"] == jobs_for["files"] + ref_agg, (jobs_for, ref_agg)
+
+
+def _mini_schema():
+    from pyspark.sql import types as T
+
+    return T.StructType([
         T.StructField("part_id", T.IntegerType(), False),
         T.StructField("lsn", T.LongType(), False),
         T.StructField("epoch", T.LongType(), False),
@@ -308,96 +293,152 @@ def _mini_batch(spark, rows):
         T.StructField("n_tok", T.IntegerType(), True),
         T.StructField("source", T.StringType(), True),
     ])
-    data = [(p, lsn, 0, op, d, [n, n + 1], n, "s") for p, lsn, op, d, n in rows]
-    return spark.createDataFrame(data, schema)
+
+
+def _mini_rows(rows):
+    return [(p, lsn, 0, op, d, [n, n + 1], n, "s") for p, lsn, op, d, n in rows]
+
+
+def _mini_batch(spark, rows):
+    """(part_id, lsn, op, doc_id, n_tok) rows → a change-batch DataFrame
+    with the full control + base payload schema."""
+    return spark.createDataFrame(_mini_rows(rows), _mini_schema())
+
+
+def _mini_table(rows):
+    """_mini_batch's rows and schema as a pyarrow table."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = _mini_schema()
+    return pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in _mini_rows(rows)],
+        schema=to_arrow_schema(schema))
+
+
+def _deliver(spark, runner, rows, bid, via, tmp_path):
+    """Apply ``rows`` as batch ``bid``: ``via="df"`` hands apply_batch_df
+    an in-memory frame (the slim-aggregate path); ``via="files"`` writes one
+    parquet file per source partition and calls apply_batch (the footer
+    path)."""
+    import pyarrow.parquet as pq
+
+    if via == "df":
+        return runner.apply_batch_df(_mini_batch(spark, rows), bid)
+    d = tmp_path / f"in_{via}_{bid}"
+    d.mkdir()
+    for p in sorted({r[0] for r in rows}):
+        pq.write_table(_mini_table([r for r in rows if r[0] == p]),
+                       str(d / f"part-{p:03d}.parquet"))
+    return runner.apply_batch(str(d), bid)
 
 
 def test_winners_exact_watermarks_nonkeyed_routing(spark, tmp_path):
     """Keys straddling partitions: partition 0's max-lsn event (A,5) loses
-    key A to partition 1's (A,10), so the winner-derived watermark misses
-    part 0 entirely. The observed-metrics watermark must still record the
-    TRUE per-partition delivered max, and a redelivery of (A,5) must be a
-    noop — the exactly-once contract without the keyed-routing assumption."""
-    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4,
-                     stats_mode="winners", exact_watermarks=True)
-    r.ensure_table()
-    r.apply_batch_df(_mini_batch(spark, [
-        (0, 5, "upsert", "A", 50),
-        (1, 10, "upsert", "A", 100),
-        (1, 3, "upsert", "B", 30),
-    ]), 0)
-    assert r.watermarks() == {"0": 5, "1": 10}
-    v = r.table.current_version()
-    # stale straddling event redelivered alone: must NOT re-apply
-    r.apply_batch_df(_mini_batch(spark, [(0, 5, "upsert", "A", 50)]), 1)
-    assert r.table.current_version() == v
-    state = {row["doc_id"]: row["n_tok"] for row in r.final_state().collect()}
-    assert state == {"A": 100, "B": 30}
-    # the control: winner-derived watermarks (exact_watermarks=False)
-    # genuinely miss part 0 here — proves the observed path is load-bearing
-    r2 = IngestRunner(spark, str(tmp_path / "wh2"), n_buckets=4,
-                      stats_mode="winners", exact_watermarks=False)
-    r2.ensure_table()
-    r2.apply_batch_df(_mini_batch(spark, [
-        (0, 5, "upsert", "A", 50),
-        (1, 10, "upsert", "A", 100),
-        (1, 3, "upsert", "B", 30),
-    ]), 0)
-    assert "0" not in r2.watermarks()
+    key A to partition 1's (A,10), so no winner carries part 0's max. The
+    watermark must still record the TRUE per-partition delivered max, and
+    a redelivery of (A,5) must be a noop — the exactly-once contract
+    without the keyed-routing assumption, on both stats paths."""
+    for via in ("df", "files"):
+        r = IngestRunner(spark, str(tmp_path / f"wh_{via}"), n_buckets=4)
+        r.ensure_table()
+        _deliver(spark, r, [
+            (0, 5, "upsert", "A", 50),
+            (1, 10, "upsert", "A", 100),
+            (1, 3, "upsert", "B", 30),
+        ], 0, via, tmp_path)
+        assert r.watermarks() == {"0": 5, "1": 10}, via
+        v = r.table.current_version()
+        # stale straddling event redelivered alone: must NOT re-apply
+        _deliver(spark, r, [(0, 5, "upsert", "A", 50)], 1, via, tmp_path)
+        assert r.table.current_version() == v, via
+        state = {row["doc_id"]: row["n_tok"]
+                 for row in r.final_state().collect()}
+        assert state == {"A": 100, "B": 30}, via
 
 
 def test_winners_exact_watermarks_new_partition_fallback(spark, tmp_path):
-    """A partition first seen mid-stream isn't in the observed expression
-    list — the catch-all must detect it and the fallback agg must record
-    its exact watermark (deletes count too)."""
-    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4,
-                     stats_mode="winners", exact_watermarks=True)
-    r.ensure_table()
-    r.apply_batch_df(_mini_batch(spark, [
-        (0, 1, "upsert", "A", 10),
-        (0, 2, "upsert", "B", 20),
-    ]), 0)
-    assert r.watermarks() == {"0": 2}
-    # part 7 appears; its max-lsn event (C,31) loses to part 0's (C,40)
-    r.apply_batch_df(_mini_batch(spark, [
-        (7, 30, "upsert", "D", 5),
-        (7, 31, "upsert", "C", 7),
-        (0, 40, "upsert", "C", 70),
-    ]), 1)
-    assert r.watermarks() == {"0": 40, "7": 31}
-    state = {row["doc_id"]: row["n_tok"] for row in r.final_state().collect()}
-    assert state == {"A": 10, "B": 20, "C": 70, "D": 5}
+    """A partition first seen mid-stream gets its exact watermark, even
+    when its max-lsn event loses its key to another partition, on both
+    stats paths."""
+    for via in ("df", "files"):
+        r = IngestRunner(spark, str(tmp_path / f"wh_{via}"), n_buckets=4)
+        r.ensure_table()
+        _deliver(spark, r, [
+            (0, 1, "upsert", "A", 10),
+            (0, 2, "upsert", "B", 20),
+        ], 0, via, tmp_path)
+        assert r.watermarks() == {"0": 2}, via
+        # part 7 appears; its max-lsn event (C,31) loses to part 0's (C,40)
+        _deliver(spark, r, [
+            (7, 30, "upsert", "D", 5),
+            (7, 31, "upsert", "C", 7),
+            (0, 40, "upsert", "C", 70),
+        ], 1, via, tmp_path)
+        assert r.watermarks() == {"0": 40, "7": 31}, via
+        state = {row["doc_id"]: row["n_tok"]
+                 for row in r.final_state().collect()}
+        assert state == {"A": 10, "B": 20, "C": 70, "D": 5}, via
 
 
-def test_winners_exact_watermarks_over_partition_cap(spark, tmp_path,
-                                                     monkeypatch):
-    """With more known partitions than EXACT_WM_MAX_PARTS the observed
-    expression list is skipped, but exactness must NOT degrade to the
-    keyed-routing assumption — the slim per-batch agg takes over."""
-    from tenzir_spark.cdc import runner as runner_mod
+def test_watermarks_mixed_row_group_file(spark, tmp_path):
+    """One input file whose single row group mixes partitions: its footer
+    cannot attribute rows to a partition, so apply_batch falls back to the
+    slim aggregate — watermarks and per-partition delivered counts stay
+    exact."""
+    import pyarrow.parquet as pq
 
-    monkeypatch.setattr(runner_mod, "EXACT_WM_MAX_PARTS", 1)
-    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4,
-                     stats_mode="winners", exact_watermarks=True)
-    r.ensure_table()
-    r.apply_batch_df(_mini_batch(spark, [
-        (0, 1, "upsert", "A", 10),
-        (1, 2, "upsert", "B", 20),
-    ]), 0)
-    assert r.watermarks() == {"0": 1, "1": 2}
-    # two known partitions > cap of 1 → slim-agg path; part 0's max-lsn
-    # event (A,5) loses key A to part 1's (A,10), so winner lsns would
-    # miss part 0 — the slim agg must still record it
-    r.apply_batch_df(_mini_batch(spark, [
+    rows = [
         (0, 5, "upsert", "A", 50),
         (1, 10, "upsert", "A", 100),
-    ]), 1)
-    assert r.watermarks() == {"0": 5, "1": 10}
-    v = r.table.current_version()
-    r.apply_batch_df(_mini_batch(spark, [(0, 5, "upsert", "A", 50)]), 2)
-    assert r.table.current_version() == v
-    state = {row["doc_id"]: row["n_tok"] for row in r.final_state().collect()}
-    assert state == {"A": 100, "B": 20}
+        (1, 3, "upsert", "B", 30),
+        (2, 7, "delete", "C", 0),
+    ]
+    path = str(tmp_path / "mixed.parquet")
+    pq.write_table(_mini_table(rows), path)
+    assert pq.read_metadata(path).num_row_groups == 1
+    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4)
+    r.ensure_table()
+    st = r.apply_batch(path, 0)
+    assert st["events_in"] == 4
+    assert r.watermarks() == {"0": 5, "1": 10, "2": 7}
+    m = {row["part_id"]: (row["events_in"], row["events_applied"])
+         for row in r.read_metrics().collect()}
+    # A's winner is part 1's; C's tombstone is part 2's
+    assert m == {0: (1, 0), 1: (2, 2), 2: (1, 1)}
+
+
+def test_stale_redelivery_metrics_are_exact(spark, tmp_path):
+    """A batch redelivered with one new event, through apply_batch_df:
+    events_in counts every delivered event, the stale ones included, and
+    events_deduped = events_in - events_applied."""
+    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4)
+    r.ensure_table()
+    first = [(0, 1, "upsert", "A", 1), (0, 2, "upsert", "B", 2),
+             (1, 3, "upsert", "C", 3)]
+    r.apply_batch_df(_mini_batch(spark, first), 0)
+    st = r.apply_batch_df(
+        _mini_batch(spark, first + [(1, 4, "upsert", "A", 4)]), 1)
+    assert st["events_in"] == 4
+    m = {row["part_id"]: (row["events_in"], row["events_applied"],
+                          row["events_deduped"])
+         for row in r.read_metrics().filter("batch_id = 1").collect()}
+    assert m == {0: (2, 0, 2), 1: (2, 1, 1)}
+
+
+def test_sync_fold_batch_records_applied_counts(spark, tmp_path):
+    """A batch whose commit triggers a synchronous fold still reports its
+    applied counts: they are read from the delta files before the fold
+    takes them out of HEAD."""
+    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4,
+                     compact_min_rows=1)
+    r.ensure_table()
+    rows = [(0, i, "upsert", f"d{i}", i) for i in range(1, 6)]
+    r.apply_batch_df(_mini_batch(spark, rows), 0)
+    assert r.table.delta_pressure()["delta_commits"] == 0  # folded
+    m = r.read_metrics().collect()
+    assert [(x["batch_id"], x["events_in"], x["events_applied"])
+            for x in m] == [(0, 5, 5)]
 
 
 def test_randomized_nonkeyed_stream_matches_oracle(spark, tmp_path):
@@ -406,8 +447,7 @@ def test_randomized_nonkeyed_stream_matches_oracle(spark, tmp_path):
     cut points, within-batch shuffling, probabilistic full-batch
     redeliveries and a mid-stream crash (new runner over the same
     warehouse re-delivering its last batch). Final state must equal the
-    in-lsn-order oracle in BOTH exact configurations: full stats mode,
-    and winners mode with exact_watermarks (the non-keyed-safe variant)."""
+    in-lsn-order oracle."""
     import random
 
     for seed in (7, 23):
@@ -432,27 +472,25 @@ def test_randomized_nonkeyed_stream_matches_oracle(spark, tmp_path):
         cuts = sorted(rng.sample(range(1, n_events), 4))
         batches = [events[a:b] for a, b in zip([0] + cuts, cuts + [n_events])]
 
-        for mode_kw in ({"stats_mode": "winners", "exact_watermarks": True},
-                        {"stats_mode": "full"}):
-            wh = str(tmp_path / f"wh_{seed}_{mode_kw['stats_mode']}")
-            r = IngestRunner(spark, wh, n_buckets=4, **mode_kw)
-            r.ensure_table()
-            bid = 0
-            for i, b in enumerate(batches):
-                rows = b[:]
-                rng.shuffle(rows)
+        wh = str(tmp_path / f"wh_{seed}")
+        r = IngestRunner(spark, wh, n_buckets=4)
+        r.ensure_table()
+        bid = 0
+        for i, b in enumerate(batches):
+            rows = b[:]
+            rng.shuffle(rows)
+            r.apply_batch_df(_mini_batch(spark, rows), bid)
+            bid += 1
+            if rng.random() < 0.4:  # broker redelivers the batch
                 r.apply_batch_df(_mini_batch(spark, rows), bid)
                 bid += 1
-                if rng.random() < 0.4:  # broker redelivers the batch
-                    r.apply_batch_df(_mini_batch(spark, rows), bid)
-                    bid += 1
-                if i == 2:  # crash: fresh runner, re-deliver last batch
-                    r = IngestRunner(spark, wh, n_buckets=4, **mode_kw)
-                    r.apply_batch_df(_mini_batch(spark, rows), bid)
-                    bid += 1
-            got = {row["doc_id"]: row["n_tok"]
-                   for row in r.final_state().collect()}
-            assert got == oracle_state, (seed, mode_kw)
+            if i == 2:  # crash: fresh runner, re-deliver last batch
+                r = IngestRunner(spark, wh, n_buckets=4)
+                r.apply_batch_df(_mini_batch(spark, rows), bid)
+                bid += 1
+        got = {row["doc_id"]: row["n_tok"]
+               for row in r.final_state().collect()}
+        assert got == oracle_state, seed
 
 
 def test_dlq_quarantines_null_key_events(spark, tmp_path):
@@ -573,7 +611,7 @@ def test_maintenance_features_are_semantics_neutral(spark, tmp_path):
         spark, str(tmp_path / "wh_maxed"), n_buckets=8,
         compact_min_rows=5_000, compact_max_commits=2,
         async_compact=True, retain_snapshots=2, sorted_compaction=True,
-        dlq=True, stats_mode="winners",
+        dlq=True,
     )
     maxed.run(chg)
     maxed.finish_compaction()
@@ -594,17 +632,17 @@ def test_maintenance_features_are_semantics_neutral(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "wh_maxed" / "corpus_dlq"))
 
 
-def test_dlq_dedupes_redelivered_rejects(spark, tmp_path):
-    """Winners-mode watermarks track winner LSNs only, so a rejected
-    event holding a partition's max LSN is redelivered FRESH every time —
-    the quarantine dedupes by (part_id, lsn): one copy, however many
-    delivery attempts carry it."""
+def test_dlq_dedupes_redelivered_rejects(spark, tmp_path, monkeypatch):
+    """A crash after the quarantine but before the manifest swap leaves
+    the watermarks where they were, so the retried batch finds its
+    rejected event FRESH again — the quarantine dedupes by (part_id, lsn):
+    one copy, however many delivery attempts carry it."""
     import pyspark.sql.types as T
 
     from tenzir_spark.cdc.runner import IngestRunner
+    from tenzir_spark.lake.table import LakeTable
 
-    runner = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4,
-                          dlq=True, stats_mode="winners")
+    runner = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4, dlq=True)
     runner.ensure_table()
     ev_schema = T.StructType([
         T.StructField("doc_id", T.StringType()),
@@ -618,12 +656,20 @@ def test_dlq_dedupes_redelivered_rejects(spark, tmp_path):
     rows = [("d1", [1], 1, "web", "insert", 0, 0),
             (None, [9], 1, "web", "insert", 0, 5)]  # max LSN, null key
     df = spark.createDataFrame(rows, ev_schema)
-    runner.apply_batch_df(df, 0)
+    real_commit = LakeTable.commit
+
+    def exploding_commit(self, *a, **k):
+        raise RuntimeError("simulated crash before manifest swap")
+
+    monkeypatch.setattr(LakeTable, "commit", exploding_commit)
+    with pytest.raises(RuntimeError):
+        runner.apply_batch_df(df, 0)
+    monkeypatch.setattr(LakeTable, "commit", real_commit)
     assert runner._last_dlq_count == 1
-    # watermark covers only the winner (lsn 0) -> redelivery finds the
-    # reject fresh again; the quarantine must not grow
-    assert runner.watermarks() == {"0": 0}
+    assert runner.watermarks() == {}
+    # the retry finds the reject fresh again; the quarantine must not grow
     st2 = runner.apply_batch_df(df, 0)
+    assert runner.watermarks() == {"0": 5}
     assert runner._last_dlq_count == 0  # nothing NEW quarantined
     # …but the batch still CARRIED a malformed event — the in-batch
     # counter reports it so a redelivery doesn't read as clean

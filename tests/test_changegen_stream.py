@@ -77,7 +77,7 @@ def test_engine_final_state_matches_expected(spark, tmp_path):
     chg, exp, wh = tmp_path / "chg", tmp_path / "exp", tmp_path / "wh"
     os.makedirs(chg)
     g = StreamedChangeGen(**CFG)
-    runner = IngestRunner(spark, str(wh), n_buckets=4, stats_mode="winners")
+    runner = IngestRunner(spark, str(wh), n_buckets=4)
     runner.ensure_table()
     prev = None
     for b in range(g.n_batches):

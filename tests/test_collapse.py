@@ -1,6 +1,5 @@
-"""LWW collapse variants: single-phase and salted two-phase max_by —
-identical semantics (winner = max lsn per key, exact-dup redeliveries
-collapse to one row)."""
+"""LWW collapse: max_by(struct, lsn) per key — winner = max lsn per key,
+exact-dup redeliveries collapse to one row."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,5 +26,4 @@ def _norm(df):
 def test_variants_equivalent(spark, batch):
     expect = [("a", 5, (5, 5)), ("b", 9, ()), ("c", 7, (7,))]
     assert _norm(collapse_lww(batch)) == expect
-    assert _norm(collapse_lww(batch, salt_buckets=8)) == expect
 
