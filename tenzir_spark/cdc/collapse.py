@@ -9,9 +9,12 @@ delete-then-insert nets to insert (SURVEY.md §7.3(d)).
 Spark-first design: NOT a window (`row_number` over partitionBy(key) sorts
 every group), but an algebraic aggregate ``max_by(struct(*), lsn)``:
 
-- Catalyst plans it as partial hash-aggregation before the shuffle, so a
-  hot key with millions of duplicate events is reduced map-side to one row
-  per map task — the shuffle then moves O(#tasks) rows per key, not O(#events).
+- Catalyst plans it as a partial aggregation before the shuffle, so a hot
+  key with millions of duplicate events is reduced map-side to one row per
+  map task — the shuffle then moves O(#tasks) rows per key, not O(#events).
+  Both phases are ``SortAggregate``s, not hash aggregations: a struct-typed
+  ``max_by`` buffer is neither hash- nor object-hash-supported (see the
+  note in ``session.py``), so each phase sorts whole rows.
 - Duplicate LSN deliveries are bit-identical redeliveries, so max_by's
   tie-break is immaterial: dedup falls out for free.
 
@@ -29,7 +32,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def lww_winners(batch: DataFrame, key: str = "doc_id", order: str = "lsn") -> DataFrame:
+    """The collapse before the winner is unpacked: one row per ``key``,
+    with the key as ``_k`` and the row holding the max ``order`` value as
+    the struct ``_w``, so a caller can project its output from ``_w`` in
+    one select."""
+    winner = F.max_by(F.struct(*batch.columns), F.col(order))
+    return batch.groupBy(F.col(key).alias("_k")).agg(winner.alias("_w"))
+
+
 def collapse_lww(batch: DataFrame, key: str = "doc_id", order: str = "lsn") -> DataFrame:
     """One row per ``key``: the full row holding the max ``order`` value."""
-    winner = F.max_by(F.struct(*batch.columns), F.col(order))
-    return batch.groupBy(F.col(key).alias("_k")).agg(winner.alias("_w")).select("_w.*")
+    return lww_winners(batch, key, order).select("_w.*")

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tenzir_spark.cdc.collapse import collapse_lww
+from tenzir_spark.cdc.collapse import lww_winners
 from tenzir_spark.lake.table import (
     BUCKET_COL,
     COMMIT_COL,
@@ -41,7 +41,6 @@ from tenzir_spark.lake.table import (
     PART_COL,
     LakeTable,
 )
-from tenzir_spark.session import local_frame
 
 CONTROL_COLS = ("lsn", "epoch", "part_id", "op")
 
@@ -124,15 +123,15 @@ def widen_type(table_t: T.DataType, batch_t: T.DataType) -> T.DataType:
     )
 
 
-def _footer_part_stats(mds) -> dict[int, tuple[int, int]] | None:
-    """``{part_id: (delivered rows, max lsn)}`` from parquet footers
-    (``pyarrow.parquet.FileMetaData``): each row group's ``part_id``
-    min == max statistics attribute its rows, and its ``lsn`` max statistic
-    bounds them — metadata only, no pass over the data (the reference's
-    catalog builds partition synopses the same way, catalog.cpp:119-171).
-    None when some row group cannot be attributed (it mixes partitions,
-    holds nulls, or has no statistics)."""
-    out: dict[int, tuple[int, int]] = {}
+def _footer_part_stats(mds) -> dict[int, tuple[int, int, int]] | None:
+    """``{part_id: (delivered rows, min lsn, max lsn)}`` from parquet
+    footers (``pyarrow.parquet.FileMetaData``): each row group's
+    ``part_id`` min == max statistics attribute its rows, and its ``lsn``
+    min/max statistics bound them — metadata only, no pass over the data
+    (the reference's catalog builds partition synopses the same way,
+    catalog.cpp:119-171). None when some row group cannot be attributed
+    (it mixes partitions, holds nulls, or has no statistics)."""
+    out: dict[int, tuple[int, int, int]] = {}
     for md in mds:
         names = md.schema.names
         if "part_id" not in names or "lsn" not in names:
@@ -147,9 +146,34 @@ def _footer_part_stats(mds) -> dict[int, tuple[int, int]] | None:
                     or not ls.has_min_max or ps.min != ps.max
                     or ps.null_count or ls.null_count):
                 return None
-            n, mx = out.get(int(ps.min), (0, -1))
-            out[int(ps.min)] = (n + g.num_rows, max(mx, int(ls.max)))
+            p = int(ps.min)
+            n, mn, mx = out.get(p, (0, int(ls.min), -1))
+            out[p] = (n + g.num_rows, min(mn, int(ls.min)), max(mx, int(ls.max)))
     return out
+
+
+def _stale_watermarks(wm: dict[str, int],
+                      part_stats: dict[int, tuple[int, int, int]]) -> dict[int, int]:
+    """The watermarks the idempotence filter has to look up: those of the
+    delivered partitions whose smallest lsn is at or below their
+    watermark, the only ones that can hold stale events. A partition left
+    out has no watermark, or all of its events lie above it; either way
+    the filter's default ``lsn > -1`` is exact, because a recorded
+    watermark is never below 0."""
+    return {p: int(wm[str(p)]) for p, (_, mn, _) in part_stats.items()
+            if str(p) in wm and mn <= int(wm[str(p)])}
+
+
+def _watermark_map(stale: dict[int, int], key_type: T.DataType) -> F.Column:
+    """``stale`` as one typed ``map<part_id type, bigint>`` literal. The
+    optimizer folds it into a single ``Literal``, and generated code takes
+    a map literal as a reference object, not inline: every batch's plan
+    compiles to the same code, whatever the watermarks (no join, and no
+    broadcast job, needed to keep them out of the code)."""
+    ks = ", ".join(str(int(k)) for k in stale)
+    vs = ", ".join(f"{int(v)}L" for v in stale.values())
+    return F.expr(f"CAST(map_from_arrays(array({ks}), array({vs})) "
+                  f"AS map<{key_type.simpleString()},bigint>)")
 
 
 class IngestRunner:
@@ -347,31 +371,40 @@ class IngestRunner:
         # first gives the batch schema (no schema-inference listing job —
         # the files of one batch are written together and share a schema;
         # evolution shows up in the footer just the same), and all of them
-        # give the per-partition delivered counts and max LSNs
+        # give the per-partition delivered counts and lsn bounds. Spark
+        # reads exactly these files: a directory's files are those its
+        # reader would pick, every name not hidden by a ``_``/``.`` prefix
+        # (a sink such as Flink's FileSink names its files ``part-<uuid>-
+        # <n>``, with no suffix), so counts, watermarks and data agree.
         from pyspark.sql.pandas.types import from_arrow_schema
 
         files = (
             [path] if path.endswith(".parquet")
             else [os.path.join(path, fn) for fn in sorted(self.fs.listdir(path))
-                  if fn.endswith(".parquet")]
+                  if not fn.startswith(("_", ".")) and not fn.endswith("._COPYING_")]
         )
+        if not files:
+            # nothing delivered: a no-op, like a pure redelivery
+            self._last_dlq_count = self._last_dlq_in_batch = 0
+            return self._batch_result(batch_id, 0, 0, time.monotonic())
         mds = [self.fs.parquet_metadata(f) for f in files]
-        reader = self.spark.read
-        if mds:
-            reader = reader.schema(from_arrow_schema(mds[0].schema.to_arrow_schema()))
-        return self.apply_batch_df(reader.parquet(path), batch_id,
+        raw = (self.spark.read
+               .schema(from_arrow_schema(mds[0].schema.to_arrow_schema()))
+               .parquet(*files))
+        return self.apply_batch_df(raw, batch_id,
                                    part_stats=_footer_part_stats(mds))
 
     def apply_batch_df(self, raw: DataFrame, batch_id: int,
-                       part_stats: dict[int, tuple[int, int]] | None = None) -> dict:
+                       part_stats: dict[int, tuple[int, int, int]] | None = None
+                       ) -> dict:
         """Micro-batch body — also the ``foreachBatch`` target of the
         Structured Streaming front-end (streaming/ingest.py). All durable
         state lives in the table snapshot, so the SAME idempotence guard
         covers batch replay, streaming-checkpoint replay, and redelivery.
 
-        ``part_stats``: ``{part_id: (delivered rows, max lsn)}`` of ``raw``
-        when the caller has it without a pass over the data (apply_batch
-        reads it from the input footers). Without it, one slim
+        ``part_stats``: ``{part_id: (delivered rows, min lsn, max lsn)}`` of
+        ``raw`` when the caller has it without a pass over the data
+        (apply_batch reads it from the input footers). Without it, one slim
         ``(part_id, lsn)`` aggregate over ``raw`` computes it."""
         t0 = time.monotonic()
         # one manifest read pins the watermarks, the schema and the bucket
@@ -380,37 +413,37 @@ class IngestRunner:
         wm = dict(snap["properties"].get("watermarks", {}))
         if part_stats is None:
             part_stats = {
-                int(r["part_id"]): (int(r["n"]), -1 if r["mx"] is None else int(r["mx"]))
-                for r in raw.groupBy("part_id")
-                .agg(F.count("*").alias("n"), F.max("lsn").alias("mx")).collect()
+                int(r["part_id"]): (int(r["n"]),
+                                    -1 if r["mn"] is None else int(r["mn"]),
+                                    -1 if r["mx"] is None else int(r["mx"]))
+                for r in raw.groupBy("part_id").agg(
+                    F.count("*").alias("n"), F.min("lsn").alias("mn"),
+                    F.max("lsn").alias("mx")).collect()
             }
         # exact for any event→partition routing: stale events sit at or
         # below the old watermark, so max(old, max delivered lsn) equals
         # max(old, max fresh lsn)
         new_wm = dict(wm)
-        for p, (_, mx) in part_stats.items():
+        for p, (_, _, mx) in part_stats.items():
             if mx > int(wm.get(str(p), -1)):
                 new_wm[str(p)] = mx
 
         # -- idempotence: only events strictly above the committed
-        # watermark. The watermark table rides a BROADCAST join, not a
-        # literal map: literals embed the values in the generated code, so
-        # every batch would compile a fresh codegen unit (measured
-        # ~0.3-0.5 s/batch) and at 10^4+ source partitions the generated
-        # source itself blows up — the join keeps the plan STABLE across
-        # batches (codegen cache hit) and the data out of the code. The
-        # table is a LocalRelation (local_frame): a createDataFrame(list)
-        # Python RDD runs a job through Python workers to build the
-        # broadcast on every batch. Codegen reuse re-measured with the
-        # LocalRelation (cdcbench narrow_rows, 4 cores, traced): 28-38 ms
-        # of compile time per batch, against 57-109 ms with the Python RDD.
-        wm_rows = [(int(k), int(v)) for k, v in wm.items()]
-        wm_df = local_frame(self.spark, wm_rows, T.StructType([
-            T.StructField("part_id", T.IntegerType(), False),
-            T.StructField("_wm", T.LongType(), False),
-        ]))
-        raw = raw.join(F.broadcast(wm_df), on="part_id", how="left")
-        is_fresh = F.col("lsn") > F.coalesce(F.col("_wm"), F.lit(-1))
+        # watermark, looked up in a map literal (_watermark_map) of the
+        # partitions that can hold stale events. A literal, not a join
+        # against a watermark table: both keep the values out of the
+        # generated code, but the join's broadcast stage costs a Spark job
+        # on every batch. A lookup scans the map's entries in order: a
+        # filter over 2M cached rows at local[4] on a 4-core box, its 8
+        # partitions the map's last entries, took 139 ms with 8 entries,
+        # 967 ms with 1,000 and 7.5 s with 10,000 — so the map lists only
+        # the stale-capable partitions, none in steady state.
+        batch_fields = raw.schema.fields
+        btypes = {f.name: f.dataType for f in batch_fields}
+        is_fresh = F.col("lsn") > F.coalesce(
+            _watermark_map(_stale_watermarks(wm, part_stats),
+                           btypes["part_id"])[F.col("part_id")],
+            F.lit(-1))
 
         # -- schema reconciliation: added columns append; a column whose
         # batch dtype differs WIDENS the table schema along the numeric
@@ -418,10 +451,7 @@ class IngestRunner:
         # parquet reader serves old narrow files under the widened schema
         # natively, so no rewrite — cast-on-read, the reference's model.
         table_schema = T.StructType.fromJson(snap["schema"])
-        batch_payload = [
-            f for f in raw.schema.fields
-            if f.name not in CONTROL_COLS and f.name != "_wm"
-        ]
+        batch_payload = [f for f in batch_fields if f.name not in CONTROL_COLS]
         new_fields = [f for f in batch_payload if f.name not in table_schema.names]
         widened = {}
         for f in batch_payload:
@@ -465,27 +495,39 @@ class IngestRunner:
                     is_fresh
                     & ~F.coalesce(applicable, F.lit(False))
                     & ~F.col("op").eqNullSafe("schema_change")
-                ).drop("_wm"),
+                ),
                 batch_id,
             )
-        data = raw.filter(is_fresh & applicable).drop("_wm")
-        collapsed = collapse_lww(data, key=self.key, order="lsn")
-        # merge-on-read delta: payload aligned to the (possibly evolved)
-        # schema + bucket + tombstone flag + source-partition lineage.
-        # ONE Spark job (collapse→write); rows/buckets/lineage come from
-        # the written parquet files — no cache of wide token arrays
-        # (caching them thrashes GC under high task concurrency).
-        delta = collapsed.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in collapsed.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in evolved.fields
-            ],
-            (F.col("op") == "delete").alias(DELETED_COL),
-            F.col("part_id").alias(PART_COL),
-        ).withColumn(BUCKET_COL, self.table.bucket_expr(
-            self.key, n_buckets=int(snap["n_buckets"])))
+        won = lww_winners(raw.filter(is_fresh & applicable),
+                          key=self.key, order="lsn")
+        # merge-on-read delta in ONE projection of the winner struct: the
+        # payload aligned to the (possibly evolved) schema, the bucket of
+        # the aligned key, the tombstone flag and the source-partition
+        # lineage, in delta_commit's column order and types, so
+        # delta_commit writes it as is. Every DataFrame call is analyzed
+        # on the spot, so each extra select is paid on every batch. The
+        # collapse→write action runs as two Spark jobs (the shuffle map
+        # stage, then the write); rows/buckets/lineage come from the
+        # written parquet files — no cache of wide token arrays (caching
+        # them thrashes GC under high task concurrency).
+        w = F.col("_w")
+
+        def aligned(f: T.StructField) -> F.Column:
+            if f.name not in btypes:
+                return F.lit(None).cast(f.dataType)
+            c = w[f.name]
+            return c if btypes[f.name] == f.dataType else c.cast(f.dataType)
+
+        payload = {f.name: aligned(f) for f in evolved.fields}
+        part = w["part_id"]
+        delta = won.select(
+            *[c.alias(n) for n, c in payload.items()],
+            self.table.bucket_expr(payload[self.key], n_buckets=int(
+                snap["n_buckets"])).alias(BUCKET_COL),
+            (w["op"] == "delete").alias(DELETED_COL),
+            (part if isinstance(btypes["part_id"], T.IntegerType)
+             else part.cast("int")).alias(PART_COL),
+        )
 
         applied: dict[int, int] = {}
 
@@ -510,18 +552,22 @@ class IngestRunner:
         )
         if version is not None:
             self._maybe_compact()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-
+        st = self._batch_result(batch_id, sum(n for n, _, _ in part_stats.values()),
+                                dstats["rows"], t0)
         self._write_metrics([
             (batch_id, p, n, applied.get(p, 0), n - applied.get(p, 0),
-             int(new_wm.get(str(p), -1)), wall_ms)
-            for p, (n, _) in sorted(part_stats.items())
+             int(new_wm.get(str(p), -1)), st["wall_ms"])
+            for p, (n, _, _) in sorted(part_stats.items())
         ], batch_id)
+        return st
+
+    def _batch_result(self, batch_id: int, events_in: int, applied_keys: int,
+                      t0: float) -> dict:
         return {
             "batch_id": batch_id,
-            "events_in": sum(n for n, _ in part_stats.values()),
-            "applied_keys": dstats["rows"],
-            "wall_ms": wall_ms,
+            "events_in": events_in,
+            "applied_keys": applied_keys,
+            "wall_ms": int((time.monotonic() - t0) * 1000),
             "version": self.table.current_version(),
             # dlq_rejected = NEWLY quarantined (0 on a redelivery whose
             # dead letters were already captured); dlq_in_batch = malformed

@@ -345,13 +345,16 @@ class LakeTable:
                 "process or after it exits")
 
     # ---------------------------------------------------------------- expr
-    def bucket_expr(self, key_col: str, n_buckets: int | None = None) -> F.Column:
+    def bucket_expr(self, key_col: str | F.Column,
+                    n_buckets: int | None = None) -> F.Column:
         """Deterministic hash bucket of the primary key (Iceberg bucket
-        transform analog). xxhash64 is JVM-side and codegen'd.
-        ``n_buckets`` defaults to HEAD's; a caller that already holds a
-        snapshot passes its count and saves the manifest read."""
+        transform analog). xxhash64 is JVM-side and codegen'd. ``key_col``
+        is a column name or an expression of the key in the table's key
+        type. ``n_buckets`` defaults to HEAD's; a caller that already holds
+        a snapshot passes its count and saves the manifest read."""
         n = self.n_buckets() if n_buckets is None else n_buckets
-        return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n)).cast("int")
+        key = F.col(key_col) if isinstance(key_col, str) else key_col
+        return F.pmod(F.xxhash64(key), F.lit(n)).cast("int")
 
     def _read_schema(
         self, payload_schema: T.StructType, with_deleted: bool = False
@@ -660,14 +663,16 @@ class LakeTable:
         """
         cid = self._alloc_commit_id()
         commit_dir = os.path.join(self.data_dir, f"{COMMIT_COL}={cid}")
-        sel = [
-            *[F.col(f.name).cast(f.dataType) for f in schema.fields],
-            F.col(BUCKET_COL).cast("int"),
-            F.col(DELETED_COL).cast("boolean"),
-        ]
+        # the delta layout: payload, then _bucket, _deleted[, _part]; a
+        # frame already in it is written as is (a select is analyzed on the
+        # spot, a per-batch cost on the ingest path)
+        layout = [*((f.name, f.dataType) for f in schema.fields),
+                  (BUCKET_COL, T.IntegerType()), (DELETED_COL, T.BooleanType())]
         if PART_COL in df.columns:
-            sel.append(F.col(PART_COL).cast("int"))
-        out = df.select(*sel)
+            layout.append((PART_COL, T.IntegerType()))
+        out = df
+        if [(f.name, f.dataType) for f in df.schema.fields] != layout:
+            out = df.select(*[F.col(n).cast(t) for n, t in layout])
         # no repartition/coalesce: AQE partition coalescing already sizes the
         # reduce stage of the upstream collapse; a coalesce(1) here would
         # serialize that whole stage onto one task

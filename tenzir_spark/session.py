@@ -88,6 +88,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every DataFrame and Column call in a call-site
+        # capture for error messages: a stack walk, a failed IPython import
+        # and about 4 extra py4j round trips. A warm
+        # F.col(x).cast("int") took 1.46 ms with it and 0.35 ms without
+        # (500-call loops on a 4-core box), and one ingest batch makes
+        # hundreds of such calls. The cost of turning it off: an error's
+        # query context no longer names the Python file:line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", mem)
     )
     # Long big-heap local runs fragment G1's old gen: SortAggregate partial

@@ -235,21 +235,19 @@ def _jobs_consumed(spark, fn, tag):
 
 
 def test_winners_mode_single_action_per_batch(spark, changes_dir, tmp_path):
-    """A batch of per-partition files runs only the jobs of its
-    idempotence join and collapse→write action (AQE materializes it as
-    one job per query stage): watermarks and delivered counts come from
-    the input footers. The same batch as one file whose row group mixes
-    partitions runs exactly one more action, the slim (part_id, lsn)
-    aggregate."""
+    """A batch of per-partition files runs exactly the jobs of its
+    collapse→write action run alone (AQE materializes it as one job per
+    query stage): watermarks and delivered counts come from the input
+    footers, and the idempotence filter is a literal that adds no job.
+    The same batch as one file whose row group mixes partitions runs
+    exactly one more action, the slim (part_id, lsn) aggregate."""
     import glob
 
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     from tenzir_spark.cdc.collapse import collapse_lww
-    from tenzir_spark.session import local_frame
 
     batches = sorted(glob.glob(os.path.join(changes_dir, "batch-*")))
     mixed = str(tmp_path / "mixed.parquet")
@@ -257,16 +255,12 @@ def test_winners_mode_single_action_per_batch(spark, changes_dir, tmp_path):
                           sorted(glob.glob(os.path.join(batches[1], "*.parquet")))])
     pq.write_table(t, mixed, row_group_size=t.num_rows)
     # the actions alone, planned first so schema inference is not counted:
-    # the broadcast watermark join, collapse and write; the aggregate
-    wm = local_frame(spark, [(0, -1)], T.StructType([
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("_wm", T.LongType(), False)]))
-    collapsed = collapse_lww(spark.read.parquet(batches[1])
-                             .join(F.broadcast(wm), "part_id", "left"))
+    # the collapse and write; the aggregate
+    collapsed = collapse_lww(spark.read.parquet(batches[1]))
     ref_write = _jobs_consumed(
         spark, lambda: collapsed.write.parquet(str(tmp_path / "ref")), "ref-write")
     agg = (spark.read.parquet(mixed).groupBy("part_id")
-           .agg(F.count("*"), F.max("lsn")))
+           .agg(F.count("*"), F.min("lsn"), F.max("lsn")))
     ref_agg = _jobs_consumed(spark, agg.collect, "ref-agg")
 
     jobs_for = {}
@@ -276,15 +270,15 @@ def test_winners_mode_single_action_per_batch(spark, changes_dir, tmp_path):
         # batch 0 pays the one-time schema/listing jobs
         r.apply_batch(batches[0], 0)
         jobs_for[tag] = _jobs_consumed(spark, lambda: r.apply_batch(path, 1), tag)
-    assert jobs_for["files"] <= ref_write, (jobs_for, ref_write)
+    assert jobs_for["files"] == ref_write, (jobs_for, ref_write)
     assert jobs_for["mixed"] == jobs_for["files"] + ref_agg, (jobs_for, ref_agg)
 
 
-def _mini_schema():
+def _mini_schema(part_type=None):
     from pyspark.sql import types as T
 
     return T.StructType([
-        T.StructField("part_id", T.IntegerType(), False),
+        T.StructField("part_id", part_type or T.IntegerType(), False),
         T.StructField("lsn", T.LongType(), False),
         T.StructField("epoch", T.LongType(), False),
         T.StructField("op", T.StringType(), False),
@@ -299,10 +293,11 @@ def _mini_rows(rows):
     return [(p, lsn, 0, op, d, [n, n + 1], n, "s") for p, lsn, op, d, n in rows]
 
 
-def _mini_batch(spark, rows):
+def _mini_batch(spark, rows, part_type=None):
     """(part_id, lsn, op, doc_id, n_tok) rows → a change-batch DataFrame
-    with the full control + base payload schema."""
-    return spark.createDataFrame(_mini_rows(rows), _mini_schema())
+    with the full control + base payload schema (``part_id`` of
+    ``part_type``, int by default)."""
+    return spark.createDataFrame(_mini_rows(rows), _mini_schema(part_type))
 
 
 def _mini_table(rows):
@@ -439,6 +434,175 @@ def test_sync_fold_batch_records_applied_counts(spark, tmp_path):
     m = r.read_metrics().collect()
     assert [(x["batch_id"], x["events_in"], x["events_applied"])
             for x in m] == [(0, 5, 5)]
+
+
+def _oracle_batch(state, wm, rows):
+    """Apply ``rows`` ((part_id, lsn, op, doc_id, n_tok)) to the in-order
+    oracle ``state``/``wm`` in place; returns ``{part_id: (events_in,
+    events_applied)}``: every delivered event counts in, each fresh LWW
+    winner (tombstones included) counts applied to its partition."""
+    fresh = sorted((r for r in rows if r[1] > wm.get(r[0], -1)),
+                   key=lambda r: r[1])
+    winners = {r[3]: r for r in fresh}
+    for d, r in winners.items():
+        if r[2] == "delete":
+            state.pop(d, None)
+        else:
+            state[d] = r[4]
+    counts = {}
+    for r in rows:
+        n, a = counts.get(r[0], (0, 0))
+        counts[r[0]] = (n + 1, a)
+        wm[r[0]] = max(wm.get(r[0], -1), r[1])
+    for r in winners.values():
+        n, a = counts[r[0]]
+        counts[r[0]] = (n, a + 1)
+    return counts
+
+
+def _check_batches(spark, r, batches, part_type=None):
+    """Deliver ``batches`` through apply_batch_df and compare the table,
+    the watermarks and every batch's per-partition events_in /
+    events_deduped with the oracle."""
+    state, wm = {}, {}
+    for bid, rows in enumerate(batches):
+        want = _oracle_batch(state, wm, rows)
+        st = r.apply_batch_df(_mini_batch(spark, rows, part_type), bid)
+        assert st["events_in"] == len(rows), bid
+        got = {x["part_id"]: (x["events_in"], x["events_deduped"])
+               for x in r.read_metrics().filter(f"batch_id = {bid}").collect()}
+        assert got == {p: (n, n - a) for p, (n, a) in want.items()}, bid
+    assert r.watermarks() == {str(p): v for p, v in wm.items()}
+    assert {x["doc_id"]: x["n_tok"]
+            for x in r.final_state().collect()} == state
+
+
+def test_watermark_literal_partition_cases(spark, tmp_path):
+    """The idempotence filter's watermark map literal, case by case: a
+    partition with no watermark yet (3), a wholly stale one (0), a
+    straddling one (1) and an all-fresh one (2), which the map leaves
+    out; for an int and a long ``part_id``."""
+    from pyspark.sql import types as T
+
+    from tenzir_spark.cdc.runner import _stale_watermarks
+
+    b0 = [(0, 1, "upsert", "A", 1), (0, 4, "upsert", "B", 4),
+          (1, 2, "upsert", "C", 2), (1, 5, "upsert", "A", 5),
+          (2, 3, "upsert", "D", 3), (2, 6, "delete", "C", 0)]
+    b1 = [(0, 1, "upsert", "A", 1), (0, 4, "upsert", "B", 4),  # stale
+          (1, 5, "upsert", "A", 5), (1, 9, "upsert", "B", 9),  # straddles
+          (1, 11, "delete", "D", 0),
+          (2, 7, "upsert", "C", 7), (2, 8, "upsert", "E", 8),  # fresh
+          (3, 10, "upsert", "A", 10), (3, 2, "upsert", "F", 2)]  # new
+    assert _stale_watermarks({"0": 4, "1": 5, "2": 6},
+                             {0: (2, 1, 4), 1: (3, 5, 11), 2: (2, 7, 8),
+                              3: (2, 2, 10)}) == {0: 4, 1: 5}
+    for part_type in (T.IntegerType(), T.LongType()):
+        r = IngestRunner(spark, str(tmp_path / f"wh_{part_type.simpleString()}"),
+                         n_buckets=4)
+        r.ensure_table()
+        _check_batches(spark, r, [b0, b1, b1], part_type)
+
+
+def test_watermark_literal_many_partitions(spark, tmp_path):
+    """2,000 watermarked partitions redelivered wholly stale, with one
+    straddler: the map lists all 2,000, and only the straddler's fresh
+    event applies."""
+    b0 = [(p, 10 * p + 1, "upsert", f"d{p}", p) for p in range(2000)]
+    b1 = b0 + [(7, 75, "upsert", "d1", 99)]
+    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4)
+    r.ensure_table()
+    _check_batches(spark, r, [b0, b1])
+
+
+def test_watermark_literal_reuses_generated_code(spark, tmp_path):
+    """Steady-state batches with new watermark values, one of them an
+    empty map, compile no new code: the map literal is a reference object
+    in the generated code, so the batch plan's code is reused."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4)
+    r.ensure_table()
+
+    def rows(lo, hi, stale=()):
+        return list(stale) + [(lsn % 2, lsn, "upsert", f"d{lsn % 7}", lsn)
+                              for lsn in range(lo, hi)]
+
+    # warm-up: an empty map, then a non-empty one
+    _deliver(spark, r, rows(0, 20), 0, "files", tmp_path)
+    _deliver(spark, r, rows(20, 40, [(0, 10, "upsert", "d3", 10)]), 1,
+             "files", tmp_path)
+    before = compiles.getCount()
+    _deliver(spark, r, rows(40, 60, [(1, 35, "upsert", "d0", 35),
+                                     (0, 30, "upsert", "d2", 30)]), 2,
+             "files", tmp_path)
+    _deliver(spark, r, rows(60, 80), 3, "files", tmp_path)
+    assert compiles.getCount() == before
+    assert r.watermarks() == {"0": 78, "1": 79}
+
+
+def test_batch_files_without_parquet_suffix(spark, tmp_path):
+    """A sink that names its files without a ``.parquet`` suffix (Flink
+    FileSink's ``part-<uuid>-<n>``): apply_batch reads the same files as
+    Spark's reader (hidden ``_``/``.`` names skipped), so delivered counts
+    and watermarks cover every applied event and a redelivery is a
+    no-op."""
+    import glob
+    import shutil
+    import uuid
+
+    from tenzir_spark.cdc.changegen import generate_changes
+
+    src = str(tmp_path / "chg")
+    generate_changes(src, n_events=600, n_docs=120, n_parts=3, n_batches=1)
+    [batch] = sorted(glob.glob(os.path.join(src, "batch-*")))
+    sink = str(tmp_path / "sink")
+    os.makedirs(sink)
+    for i, f in enumerate(sorted(glob.glob(os.path.join(batch, "*.parquet")))):
+        shutil.copy(f, os.path.join(sink, f"part-{uuid.uuid4()}-{i}"))
+    open(os.path.join(sink, "_SUCCESS"), "w").close()
+    with open(os.path.join(sink, ".part-0.crc"), "w") as f:
+        f.write("not parquet")
+
+    ref = IngestRunner(spark, str(tmp_path / "wh_ref"), n_buckets=4)
+    ref.ensure_table()
+    want = ref.apply_batch(batch, 0)
+    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4)
+    r.ensure_table()
+    st = r.apply_batch(sink, 0)
+    assert want["events_in"] > 0
+    assert (st["events_in"], st["applied_keys"]) == \
+        (want["events_in"], want["applied_keys"])
+    assert r.watermarks() == ref.watermarks() != {}
+    v = r.table.current_version()
+    assert r.apply_batch(sink, 1)["applied_keys"] == 0
+    assert r.table.current_version() == v
+    assert sorted(map(str, r.final_state().collect())) == \
+        sorted(map(str, ref.final_state().collect()))
+
+
+def test_empty_batch_directory_is_noop(spark, changes_dir, tmp_path):
+    """A batch directory with no data files applies nothing and commits
+    no snapshot, like a pure redelivery, and ``run`` carries on past it."""
+    import glob
+    import shutil
+
+    chg = str(tmp_path / "chg")
+    os.makedirs(chg)
+    batches = sorted(glob.glob(os.path.join(changes_dir, "batch-*")))
+    shutil.copytree(batches[0], os.path.join(chg, "batch-00000"))
+    os.makedirs(os.path.join(chg, "batch-00001"))
+    open(os.path.join(chg, "batch-00001", "_SUCCESS"), "w").close()
+    shutil.copytree(batches[1], os.path.join(chg, "batch-00002"))
+    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4)
+    r.ensure_table()
+    r.apply_batch(os.path.join(chg, "batch-00000"), 0)
+    v, wm = r.table.current_version(), r.watermarks()
+    st = r.apply_batch(os.path.join(chg, "batch-00001"), 1)
+    assert (st["events_in"], st["applied_keys"], st["version"]) == (0, 0, v)
+    assert r.watermarks() == wm
+    assert r.run(chg)["batches"] == 3
 
 
 def test_randomized_nonkeyed_stream_matches_oracle(spark, tmp_path):

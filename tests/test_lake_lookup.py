@@ -315,10 +315,13 @@ def test_apply_batch_plans_have_no_python_rdd(spark, tmp_path):
     generate_changes(src, n_events=600, n_docs=120, n_parts=3, n_batches=2)
     r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4)
     r.ensure_table()
-    for i, p in enumerate(sorted(glob.glob(os.path.join(src, "batch-*")))):
+    batches = sorted(glob.glob(os.path.join(src, "batch-*")))
+    # the second delivery of batch 0 is stale, so its watermarks are
+    # looked up in a non-empty map literal
+    for i, p in enumerate(batches + batches[:1]):
         plans = _executed_plans(spark, lambda: r.apply_batch(p, i))
-        # the first batch's watermark table is empty, and the optimizer
-        # drops a left join with an empty LocalRelation
-        assert i == 0 or any("BroadcastHashJoin" in p_ for p_ in plans)
+        assert plans
         for p_ in plans:
             assert "ExistingRDD" not in p_, p_
+            # watermarks are a literal in the filter: no join, no broadcast
+            assert "BroadcastExchange" not in p_ and "Join" not in p_, p_
