@@ -123,15 +123,15 @@ def widen_type(table_t: T.DataType, batch_t: T.DataType) -> T.DataType:
     )
 
 
-def _footer_part_stats(mds) -> dict[int, tuple[int, int, int]] | None:
-    """``{part_id: (delivered rows, min lsn, max lsn)}`` from parquet
-    footers (``pyarrow.parquet.FileMetaData``): each row group's
-    ``part_id`` min == max statistics attribute its rows, and its ``lsn``
-    min/max statistics bound them — metadata only, no pass over the data
-    (the reference's catalog builds partition synopses the same way,
+def _footer_part_stats(mds) -> dict[int, tuple[int, int]] | None:
+    """``{part_id: (delivered rows, max lsn)}`` from parquet footers
+    (``pyarrow.parquet.FileMetaData``): each row group's ``part_id``
+    min == max statistics attribute its rows, and its ``lsn`` max
+    statistic bounds them — metadata only, no pass over the data (the
+    reference's catalog builds partition synopses the same way,
     catalog.cpp:119-171). None when some row group cannot be attributed
     (it mixes partitions, holds nulls, or has no statistics)."""
-    out: dict[int, tuple[int, int, int]] = {}
+    out: dict[int, tuple[int, int]] = {}
     for md in mds:
         names = md.schema.names
         if "part_id" not in names or "lsn" not in names:
@@ -147,33 +147,43 @@ def _footer_part_stats(mds) -> dict[int, tuple[int, int, int]] | None:
                     or ps.null_count or ls.null_count):
                 return None
             p = int(ps.min)
-            n, mn, mx = out.get(p, (0, int(ls.min), -1))
-            out[p] = (n + g.num_rows, min(mn, int(ls.min)), max(mx, int(ls.max)))
+            n, mx = out.get(p, (0, -1))
+            out[p] = (n + g.num_rows, max(mx, int(ls.max)))
     return out
 
 
-def _stale_watermarks(wm: dict[str, int],
-                      part_stats: dict[int, tuple[int, int, int]]) -> dict[int, int]:
-    """The watermarks the idempotence filter has to look up: those of the
-    delivered partitions whose smallest lsn is at or below their
-    watermark, the only ones that can hold stale events. A partition left
-    out has no watermark, or all of its events lie above it; either way
-    the filter's default ``lsn > -1`` is exact, because a recorded
-    watermark is never below 0."""
-    return {p: int(wm[str(p)]) for p, (_, mn, _) in part_stats.items()
-            if str(p) in wm and mn <= int(wm[str(p)])}
-
-
-def _watermark_map(stale: dict[int, int], key_type: T.DataType) -> F.Column:
-    """``stale`` as one typed ``map<part_id type, bigint>`` literal. The
+def _watermark_of(wm: dict[str, int], parts, key_type: T.DataType) -> F.Column:
+    """Each row's committed partition watermark, -1 where its partition
+    has none (a recorded watermark is never below 0), for the delivered
+    partitions ``parts``. The watermarks are one typed literal: the
     optimizer folds it into a single ``Literal``, and generated code takes
-    a map literal as a reference object, not inline: every batch's plan
-    compiles to the same code, whatever the watermarks (no join, and no
-    broadcast job, needed to keep them out of the code)."""
-    ks = ", ".join(str(int(k)) for k in stale)
-    vs = ", ".join(f"{int(v)}L" for v in stale.values())
-    return F.expr(f"CAST(map_from_arrays(array({ks}), array({vs})) "
-                  f"AS map<{key_type.simpleString()},bigint>)")
+    an array or map literal as a reference object, not inline, so every
+    batch's plan compiles to the same code whatever the watermarks (no
+    join, and no broadcast job, needed to keep them out of the code).
+
+    Dense non-negative partition ids (a log's 0..P-1; for P delivered
+    partitions, every id below 2P + 64, so the array stays O(P)) index an
+    array literal, one O(1) lookup per row. Other ids look up a map literal,
+    and a map lookup scans its entries in order: a filter over 2M cached
+    rows at local[4] on a 4-core box, its 8 partitions the map's last
+    entries, took 139 ms with 8 entries, 967 ms with 1,000 and 7.5 s
+    with 10,000."""
+    known = {int(p): int(wm[str(p)]) for p in parts if str(p) in wm}
+    if not known:
+        return F.lit(-1)
+
+    def lit(vals, t: str) -> F.Column:
+        # one string the optimizer folds into an array<t> literal: its
+        # analysis does not grow with the entries, as an array(...) of
+        # 10,000 literals does (~0.3 s)
+        return F.split(F.lit(",".join(map(str, vals))), ",").cast(f"array<{t}>")
+
+    if min(parts) >= 0 and max(parts) < 2 * len(parts) + 64:
+        wms = lit([known.get(p, -1) for p in range(max(parts) + 1)], "bigint")
+        return F.coalesce(F.get(wms, F.col("part_id")), F.lit(-1))
+    wms = F.map_from_arrays(lit(known, key_type.simpleString()),
+                            lit(known.values(), "bigint"))
+    return F.coalesce(wms[F.col("part_id")], F.lit(-1))
 
 
 class IngestRunner:
@@ -395,16 +405,15 @@ class IngestRunner:
                                    part_stats=_footer_part_stats(mds))
 
     def apply_batch_df(self, raw: DataFrame, batch_id: int,
-                       part_stats: dict[int, tuple[int, int, int]] | None = None
-                       ) -> dict:
+                       part_stats: dict[int, tuple[int, int]] | None = None) -> dict:
         """Micro-batch body — also the ``foreachBatch`` target of the
         Structured Streaming front-end (streaming/ingest.py). All durable
         state lives in the table snapshot, so the SAME idempotence guard
         covers batch replay, streaming-checkpoint replay, and redelivery.
 
-        ``part_stats``: ``{part_id: (delivered rows, min lsn, max lsn)}`` of
-        ``raw`` when the caller has it without a pass over the data
-        (apply_batch reads it from the input footers). Without it, one slim
+        ``part_stats``: ``{part_id: (delivered rows, max lsn)}`` of ``raw``
+        when the caller has it without a pass over the data (apply_batch
+        reads it from the input footers). Without it, one slim
         ``(part_id, lsn)`` aggregate over ``raw`` computes it."""
         t0 = time.monotonic()
         # one manifest read pins the watermarks, the schema and the bucket
@@ -413,37 +422,20 @@ class IngestRunner:
         wm = dict(snap["properties"].get("watermarks", {}))
         if part_stats is None:
             part_stats = {
-                int(r["part_id"]): (int(r["n"]),
-                                    -1 if r["mn"] is None else int(r["mn"]),
-                                    -1 if r["mx"] is None else int(r["mx"]))
-                for r in raw.groupBy("part_id").agg(
-                    F.count("*").alias("n"), F.min("lsn").alias("mn"),
-                    F.max("lsn").alias("mx")).collect()
+                int(r["part_id"]): (int(r["n"]), -1 if r["mx"] is None else int(r["mx"]))
+                for r in raw.groupBy("part_id")
+                .agg(F.count("*").alias("n"), F.max("lsn").alias("mx")).collect()
             }
         # exact for any event→partition routing: stale events sit at or
         # below the old watermark, so max(old, max delivered lsn) equals
         # max(old, max fresh lsn)
         new_wm = dict(wm)
-        for p, (_, _, mx) in part_stats.items():
+        for p, (_, mx) in part_stats.items():
             if mx > int(wm.get(str(p), -1)):
                 new_wm[str(p)] = mx
 
-        # -- idempotence: only events strictly above the committed
-        # watermark, looked up in a map literal (_watermark_map) of the
-        # partitions that can hold stale events. A literal, not a join
-        # against a watermark table: both keep the values out of the
-        # generated code, but the join's broadcast stage costs a Spark job
-        # on every batch. A lookup scans the map's entries in order: a
-        # filter over 2M cached rows at local[4] on a 4-core box, its 8
-        # partitions the map's last entries, took 139 ms with 8 entries,
-        # 967 ms with 1,000 and 7.5 s with 10,000 — so the map lists only
-        # the stale-capable partitions, none in steady state.
         batch_fields = raw.schema.fields
         btypes = {f.name: f.dataType for f in batch_fields}
-        is_fresh = F.col("lsn") > F.coalesce(
-            _watermark_map(_stale_watermarks(wm, part_stats),
-                           btypes["part_id"])[F.col("part_id")],
-            F.lit(-1))
 
         # -- schema reconciliation: added columns append; a column whose
         # batch dtype differs WIDENS the table schema along the numeric
@@ -471,6 +463,21 @@ class IngestRunner:
             if new_fields or widened
             else table_schema
         )
+        if new_wm == wm and evolved is table_schema:
+            # pure redelivery (a crash-recovery replay of a whole batch):
+            # every delivered event sits at or below its partition's
+            # watermark, so nothing is fresh, nothing quarantines (the DLQ
+            # takes fresh events only) and the commit would abort as a
+            # no-op. Decided on the driver, without a Spark job and without
+            # a watermark lookup per row.
+            self._last_dlq_count = self._last_dlq_in_batch = 0
+            return self._finish_batch(batch_id, part_stats, {}, new_wm, 0, t0)
+
+        # -- idempotence: only events strictly above the committed
+        # watermark (_watermark_of: a literal, not a join against a
+        # watermark table; the join's broadcast stage cost a Spark job on
+        # every batch)
+        is_fresh = F.col("lsn") > _watermark_of(wm, part_stats, btypes["part_id"])
 
         # SHARED apply predicate: the DLQ's quarantine-completeness
         # invariant ("anything fresh the engine won't apply either
@@ -552,12 +559,18 @@ class IngestRunner:
         )
         if version is not None:
             self._maybe_compact()
-        st = self._batch_result(batch_id, sum(n for n, _, _ in part_stats.values()),
-                                dstats["rows"], t0)
+        return self._finish_batch(batch_id, part_stats, applied, new_wm,
+                                  dstats["rows"], t0)
+
+    def _finish_batch(self, batch_id: int, part_stats: dict[int, tuple[int, int]],
+                      applied: dict[int, int], new_wm: dict[str, int],
+                      applied_keys: int, t0: float) -> dict:
+        st = self._batch_result(batch_id, sum(n for n, _ in part_stats.values()),
+                                applied_keys, t0)
         self._write_metrics([
             (batch_id, p, n, applied.get(p, 0), n - applied.get(p, 0),
              int(new_wm.get(str(p), -1)), st["wall_ms"])
-            for p, (n, _, _) in sorted(part_stats.items())
+            for p, (n, _) in sorted(part_stats.items())
         ], batch_id)
         return st
 

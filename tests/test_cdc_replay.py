@@ -260,7 +260,7 @@ def test_winners_mode_single_action_per_batch(spark, changes_dir, tmp_path):
     ref_write = _jobs_consumed(
         spark, lambda: collapsed.write.parquet(str(tmp_path / "ref")), "ref-write")
     agg = (spark.read.parquet(mixed).groupBy("part_id")
-           .agg(F.count("*"), F.min("lsn"), F.max("lsn")))
+           .agg(F.count("*"), F.max("lsn")))
     ref_agg = _jobs_consumed(spark, agg.collect, "ref-agg")
 
     jobs_for = {}
@@ -478,13 +478,12 @@ def _check_batches(spark, r, batches, part_type=None):
 
 
 def test_watermark_literal_partition_cases(spark, tmp_path):
-    """The idempotence filter's watermark map literal, case by case: a
+    """The idempotence filter's watermark literal, case by case: a
     partition with no watermark yet (3), a wholly stale one (0), a
-    straddling one (1) and an all-fresh one (2), which the map leaves
-    out; for an int and a long ``part_id``."""
+    straddling one (1) and an all-fresh one (2), then a pure redelivery;
+    for an int and a long ``part_id`` (the array literal of dense ids) and
+    for sparse, negative ids (the map literal)."""
     from pyspark.sql import types as T
-
-    from tenzir_spark.cdc.runner import _stale_watermarks
 
     b0 = [(0, 1, "upsert", "A", 1), (0, 4, "upsert", "B", 4),
           (1, 2, "upsert", "C", 2), (1, 5, "upsert", "A", 5),
@@ -494,19 +493,21 @@ def test_watermark_literal_partition_cases(spark, tmp_path):
           (1, 11, "delete", "D", 0),
           (2, 7, "upsert", "C", 7), (2, 8, "upsert", "E", 8),  # fresh
           (3, 10, "upsert", "A", 10), (3, 2, "upsert", "F", 2)]  # new
-    assert _stale_watermarks({"0": 4, "1": 5, "2": 6},
-                             {0: (2, 1, 4), 1: (3, 5, 11), 2: (2, 7, 8),
-                              3: (2, 2, 10)}) == {0: 4, 1: 5}
-    for part_type in (T.IntegerType(), T.LongType()):
-        r = IngestRunner(spark, str(tmp_path / f"wh_{part_type.simpleString()}"),
-                         n_buckets=4)
+
+    def sparse(rows):
+        return [(p * 100_003 - 5, *r) for p, *r in rows]
+
+    for name, part_type, f in (("int", T.IntegerType(), list),
+                               ("long", T.LongType(), list),
+                               ("sparse", T.IntegerType(), sparse)):
+        r = IngestRunner(spark, str(tmp_path / f"wh_{name}"), n_buckets=4)
         r.ensure_table()
-        _check_batches(spark, r, [b0, b1, b1], part_type)
+        _check_batches(spark, r, [f(b0), f(b1), f(b1)], part_type)
 
 
 def test_watermark_literal_many_partitions(spark, tmp_path):
     """2,000 watermarked partitions redelivered wholly stale, with one
-    straddler: the map lists all 2,000, and only the straddler's fresh
+    straddler: the literal lists all 2,000, and only the straddler's fresh
     event applies."""
     b0 = [(p, 10 * p + 1, "upsert", f"d{p}", p) for p in range(2000)]
     b1 = b0 + [(7, 75, "upsert", "d1", 99)]
@@ -515,31 +516,75 @@ def test_watermark_literal_many_partitions(spark, tmp_path):
     _check_batches(spark, r, [b0, b1])
 
 
+def test_pure_redelivery_runs_no_spark_job(spark, tmp_path):
+    """A redelivered batch whose every event sits at or below its
+    partition's watermark is decided on the driver: no Spark job, no
+    snapshot, no dead letter (the quarantine takes fresh events only), and
+    its metrics count every event as deduped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4, dlq=True)
+    r.ensure_table()
+    rows = [(p, lsn, "upsert", f"d{lsn % 5}", lsn)
+            for p in range(3) for lsn in range(4)]
+    rows.append((1, 4, "upsert", None, 0))  # a dead letter
+
+    def deliver(bid):
+        d = tmp_path / f"in_{bid}"
+        d.mkdir()
+        for p in range(3):
+            t = _mini_table([x for x in rows if x[0] == p])
+            t = t.cast(pa.schema([f.with_nullable(True) for f in t.schema]))
+            pq.write_table(t, str(d / f"part-{p}.parquet"))
+        return r.apply_batch(str(d), bid)
+
+    st = deliver(0)
+    assert st["dlq_rejected"] == st["dlq_in_batch"] == 1
+    v, wm = r.table.current_version(), r.watermarks()
+    out = {}
+    assert _jobs_consumed(spark, lambda: out.update(deliver(1)),
+                          "redeliver") == 0
+    assert (out["events_in"], out["applied_keys"], out["version"]) == \
+        (len(rows), 0, v)
+    assert out["dlq_rejected"] == out["dlq_in_batch"] == 0
+    assert r.watermarks() == wm
+    assert sorted((x["part_id"], x["events_in"], x["events_deduped"])
+                  for x in r.read_metrics().filter("batch_id = 1").collect()) \
+        == [(0, 4, 4), (1, 5, 5), (2, 4, 4)]
+
+
 def test_watermark_literal_reuses_generated_code(spark, tmp_path):
-    """Steady-state batches with new watermark values, one of them an
-    empty map, compile no new code: the map literal is a reference object
-    in the generated code, so the batch plan's code is reused."""
+    """Steady-state batches with new watermark values compile no new
+    code, through the array literal (dense ids), the constant -1 (no
+    delivered partition has a watermark) and the map literal (sparse
+    ids): a literal is a reference object in the generated code, so the
+    batch plan's code is reused."""
     jvm = spark._jvm
     compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics \
         .METRIC_COMPILATION_TIME()
     r = IngestRunner(spark, str(tmp_path / "wh"), n_buckets=4)
     r.ensure_table()
 
-    def rows(lo, hi, stale=()):
-        return list(stale) + [(lsn % 2, lsn, "upsert", f"d{lsn % 7}", lsn)
-                              for lsn in range(lo, hi)]
+    def rows(lo, hi, stale=(), parts=(0, 1)):
+        return list(stale) + [(parts[lsn % len(parts)], lsn, "upsert",
+                               f"d{lsn % 7}", lsn) for lsn in range(lo, hi)]
 
-    # warm-up: an empty map, then a non-empty one
+    # warm-up: each lookup once
     _deliver(spark, r, rows(0, 20), 0, "files", tmp_path)
     _deliver(spark, r, rows(20, 40, [(0, 10, "upsert", "d3", 10)]), 1,
              "files", tmp_path)
+    _deliver(spark, r, rows(40, 50, parts=(0, 1, 3000)), 2, "files", tmp_path)
     before = compiles.getCount()
-    _deliver(spark, r, rows(40, 60, [(1, 35, "upsert", "d0", 35),
-                                     (0, 30, "upsert", "d2", 30)]), 2,
+    _deliver(spark, r, rows(50, 70, [(1, 35, "upsert", "d0", 35),
+                                     (0, 30, "upsert", "d2", 30)]), 3,
              "files", tmp_path)
-    _deliver(spark, r, rows(60, 80), 3, "files", tmp_path)
+    _deliver(spark, r, rows(70, 80, parts=(2,)), 4, "files", tmp_path)
+    _deliver(spark, r, rows(80, 100, [(0, 50, "upsert", "d1", 50)],
+                            parts=(0, 1, 5000)), 5, "files", tmp_path)
     assert compiles.getCount() == before
-    assert r.watermarks() == {"0": 78, "1": 79}
+    assert r.watermarks() == {"0": 99, "1": 97, "2": 79, "3000": 47,
+                              "5000": 98}
 
 
 def test_batch_files_without_parquet_suffix(spark, tmp_path):
